@@ -5,12 +5,15 @@ Run from the repository root:
 
     python3 perfbench/run.py --workload ingest --seed 1 --seconds 10 --trace 0
 
-Workloads: query_mix, duel_graph, corpus_curation, and ingest, which
-``BENCHMARK.json`` leaves out (see ``README.md`` and ``workloads.py``). Each run is one fresh ``local[nproc]`` Spark process.
+Workloads: query_mix and corpus_curation, and duel_graph and ingest,
+which ``BENCHMARK.json`` leaves out (see ``README.md`` and
+``workloads.py``). Each run is one fresh ``local[nproc]`` Spark process.
 It makes its inputs from the seed (cached under ``.bench_cache/``), sets
 up, repeats the workload's pass until ``--seconds`` would be exceeded,
-then checks every answer. It prints a full record as one JSON line and,
-last, the result line
+then checks every answer. ``run_cpu_s``, the bounded time, is the median
+CPU time of the process tree in a pass; ``run_s`` is the wall time of
+the fastest pass. It prints a full record as one JSON line and, last,
+the result line
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
@@ -77,19 +80,39 @@ def _pss_kb(pid: int) -> int:
     return 0
 
 
+PAGE_KB = os.sysconf("SC_PAGE_SIZE") // 1024
+
+
+def _resident_kb(pid: int, root: int) -> int:
+    """RSS for this process and the JVM, which share no pages with the
+    rest of the tree; PSS for the Python workers, which the worker
+    daemon forks. (PSS of the JVM walks its page tables: ~50 ms a read
+    at a 2 GB heap, holding the JVM's memory-map lock.)"""
+    try:
+        with open(f"/proc/{pid}/comm") as fh:
+            forked = pid != root and fh.read().startswith("python")
+        if forked:
+            return _pss_kb(pid)
+        with open(f"/proc/{pid}/statm") as fh:
+            return int(fh.read().split()[1]) * PAGE_KB
+    except OSError:
+        return 0
+
+
 class PeakRss(threading.Thread):
-    """Samples the resident memory (PSS) of this process tree (Python,
-    the JVM, the Python workers) every 50 ms and keeps the peak."""
+    """Samples the resident memory of this process tree (Python, the
+    JVM, the Python workers) every 200 ms and keeps the peak."""
 
     def __init__(self):
         super().__init__(daemon=True)
         self.peak_kb = 0
-        self.at_peak: dict[int, int] = {}  # pid -> RSS kB at the peak
+        self.at_peak: dict[int, int] = {}  # pid -> resident kB at the peak
         self._stop_evt = threading.Event()
 
     def run(self):
-        while not self._stop_evt.wait(0.05):
-            rss = {p: _pss_kb(p) for p in _tree_pids(os.getpid())}
+        root = os.getpid()
+        while not self._stop_evt.wait(0.2):
+            rss = {p: _resident_kb(p, root) for p in _tree_pids(root)}
             if sum(rss.values()) > self.peak_kb:
                 self.peak_kb, self.at_peak = sum(rss.values()), rss
 
@@ -117,21 +140,26 @@ def _prune(directory: str) -> None:
         os.remove(f)
 
 
-def _timed(wl, ctx, seconds: float, between) -> list[tuple[float, list]]:
+def _timed(wl, ctx, seconds: float, between) -> list[tuple[float, float, list]]:
     """A batch workload's one submission, or a closed loop of passes
     repeated while another one fits in ``seconds``. Returns (pass wall
-    time, ops) per pass."""
+    time, pass CPU time of the process tree, ops) per pass."""
+    from bench import _tree_cpu_jiffies
+
     from spans import median
 
+    hz = os.sysconf("SC_CLK_TCK")
     passes = []
     start = time.perf_counter()
     while True:
-        t0 = time.perf_counter()
+        t0, c0 = time.perf_counter(), _tree_cpu_jiffies()
         ops = wl.one_pass(ctx)
-        passes.append((time.perf_counter() - t0, ops))
+        passes.append(
+            (time.perf_counter() - t0, (_tree_cpu_jiffies() - c0) / hz, ops)
+        )
         between()
         elapsed = time.perf_counter() - start
-        if wl.batch or elapsed + median(p for p, _ in passes) > seconds:
+        if wl.batch or elapsed + median(p[0] for p in passes) > seconds:
             return passes
 
 
@@ -272,27 +300,41 @@ def run(args) -> int:
         }
         tracer.unhook()
 
-        ops = [op for _, p in passes for op in p]
+        ops = [op for *_, p in passes for op in p]
         wl.check(ctx, ops)
         lat = [op.latency_s for op in ops]
         tail, pct = _tail(lat)
-        failed = sum(1 for op in ops if not op.ok)
+        kind_p50_ms = {
+            k: median(op.latency_s for op in ops if op.kind == k) * 1e3
+            for k in sorted({op.kind for op in ops})
+        }
+        checked = ctx.setup_ops + ops
+        failed = sum(1 for op in checked if not op.ok)
         record.update(
             passes=len(passes),
-            pass_s=[p for p, _ in passes],
-            run_s=median(p for p, _ in passes),
+            pass_s=[p[0] for p in passes],
+            pass_cpu_s=[p[1] for p in passes],
+            # the bounded time: CPU seconds (user + system) of Python,
+            # the JVM and the Python workers. Host CPU steal, which slows
+            # whole runs of these sub-second jobs by up to 65%, is not
+            # charged to them.
+            run_cpu_s=median(p[1] for p in passes),
+            # the fastest pass: one quiet pass is enough for the minimum
+            run_s=min(p[0] for p in passes),
             op_p50_ms=median(lat) * 1e3,
             op_tail_ms=tail * 1e3,
             op_tail_pct=pct,
             op_samples=len(lat),
-            op_kind_p50_ms={
-                k: median(op.latency_s for op in ops if op.kind == k) * 1e3
-                for k in sorted({op.kind for op in ops})
+            op_kind_p50_ms=kind_p50_ms,
+            op_kind_ms={
+                k: [op.latency_s * 1e3 for op in ops if op.kind == k]
+                for k in kind_p50_ms
             },
-            attempted=len(ops),
+            setup_op_s={op.kind: op.latency_s for op in ctx.setup_ops},
+            attempted=len(checked),
             failed=failed,
-            failed_frac=failed / len(ops),
-            errors=[f"{op.kind}: {op.error}" for op in ops if not op.ok][:5],
+            failed_frac=failed / len(checked),
+            errors=[f"{op.kind}: {op.error}" for op in checked if not op.ok][:5],
             **ctx.record,
             **_spark_totals(spark),
         )
@@ -332,7 +374,7 @@ def run(args) -> int:
     print(json.dumps(record, default=str))
     print(json.dumps({
         "correct": failed == 0,
-        "attempted": len(ops),
+        "attempted": len(checked),
         "failed": failed,
         "metrics": metrics,
     }))

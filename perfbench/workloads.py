@@ -3,7 +3,9 @@
 Each workload has inputs made from the seed, a set-up, a *pass* of
 timed work and a check of every answer the pass produced. A pass
 returns its operations as ``Op`` records; the checks run after the
-timed section and mark the operations that were wrong.
+timed section and mark the operations that were wrong. Operations run
+in set-up (``Ctx.setup_ops``) are checked and counted the same way,
+but their time is set-up time.
 
 The three batch workloads time one submission, cold, as a user running
 the command in a fresh session meets it: a single pass on a JVM only
@@ -15,7 +17,9 @@ warms up first and then loops.
   empty warehouse.
 - ``query_mix`` (closed loop, one client): the reference's five
   questions in three forms (Mongo pipeline, Cypher text,
-  ``operators.cricket`` function), one query after another.
+  ``operators.cricket`` function), one query after another. Its set-up
+  builds the warehouse with the CLI ``etl`` entry and runs the
+  ``duel_graph`` pass once over it.
 - ``duel_graph`` (batch): the CLI ``graph`` command, then the
   reference's ``gds.pageRank.stream`` statement through the Cypher
   compiler.
@@ -68,6 +72,7 @@ class Ctx:
     tiny: bool
     work: str  # scratch directory of this run
     setup_s: float = 0.0
+    setup_ops: list = field(default_factory=list)  # Op of set-up, checked
     state: dict = field(default_factory=dict)
     record: dict = field(default_factory=dict)
 
@@ -406,7 +411,9 @@ def check_topk(got: list[tuple], full: list[tuple], k: int, key) -> str | None:
     return None
 
 
-WARMUP_ROUNDS = 2
+# round times still fall for about four rounds after the set-up's graph
+# pass, while the JIT compiles the query paths
+WARMUP_ROUNDS = 4
 
 
 class QueryMix:
@@ -426,6 +433,9 @@ class QueryMix:
         )
         ctx.state["deliveries"] = deliveries
         ctx.state["edges"] = faced_edges(deliveries)
+        # the duel graph over the same warehouse: job-count-bound
+        # iterations, timed as set-up so they do not swamp the loop
+        ctx.setup_ops = DuelGraph().one_pass(ctx)
         ctx.setup_s += time.perf_counter() - t0
         self._key_pools(ctx)
         ctx.state["rng"] = random.Random(ctx.seed)
@@ -508,6 +518,7 @@ class QueryMix:
         ]
 
     def check(self, ctx: Ctx, ops: list[Op]) -> None:
+        DuelGraph().check(ctx, ctx.setup_ops)
         con = ctx.state["duck"]
         answers: dict = {}
         for op in ops:
