@@ -28,7 +28,7 @@ tests/test_bpe.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.operators.spec import QuerySpec
@@ -80,22 +80,20 @@ def bpe_train(
     on (left, right) so training is deterministic across engines,
     partitionings, and runs."""
     return spark.createDataFrame(
-        _train_merges(spark, docs, n_merges),
+        _train_merges(docs, n_merges),
         "merge_rank int, left string, right string,"
         " merged string, weighted_count bigint",
     )
 
 
 def _train_merges(
-    spark: SparkSession, docs: DataFrame, n_merges: int
+    docs: DataFrame, n_merges: int
 ) -> list[tuple[int, str, str, str, int]]:
     """The training loop itself; returns the driver-side merge list
     (O(n_merges) scalars — the same whitelisted class as the per-
     round argmax reads it is built from)."""
-    w_obs = Observation()
     vocab = (
         word_frequencies(docs)
-        .observe(w_obs, F.count(F.lit(1)).alias("n"))
         .select(
             F.concat(
                 F.split("w", ""), F.array(F.lit(END))
@@ -104,41 +102,28 @@ def _train_merges(
         )
         .localCheckpoint()
     )
-    # vocabulary-sized loop frames: size the per-iteration shuffles
-    # from the measured distinct-word count (CC-loop discipline) —
-    # 32 default partitions on KB frames is pure task-launch overhead
-    # locally, and the same formula keeps partitions in-memory at
-    # cluster vocabulary scales.
-    n_words = int(w_obs.get["n"])
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(max(2, n_words // 100_000))
-    )
+    # The per-round pair-count reduce is vocabulary-sized; the
+    # session's AQE coalesces its partitions, so no sizing is needed.
     merges: list[tuple[int, str, str, str, int]] = []
-    try:
-        for rank in range(1, n_merges + 1):
-            top = (
-                vocab.select(
-                    "freq", F.explode(F.expr(_PAIRS)).alias("p")
-                )
-                .groupBy("p")
-                .agg(F.sum("freq").alias("cnt"))
-                .orderBy(F.desc("cnt"), F.asc("p.a"), F.asc("p.b"))
-                .limit(1)
-                .first()  # O(1): the argmax pair only, never data rows
-            )
-            if top is None:
-                break
-            a, b, cnt = top["p"]["a"], top["p"]["b"], int(top["cnt"])
-            merges.append((rank, a, b, a + b, cnt))
-            vocab = vocab.select(
-                F.expr(
-                    _MERGE_FOLD.format(col="syms", a=a, b=b, ab=a + b)
-                ).alias("syms"),
-                "freq",
-            ).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    for rank in range(1, n_merges + 1):
+        top = (
+            vocab.select("freq", F.explode(F.expr(_PAIRS)).alias("p"))
+            .groupBy("p")
+            .agg(F.sum("freq").alias("cnt"))
+            .orderBy(F.desc("cnt"), F.asc("p.a"), F.asc("p.b"))
+            .limit(1)
+            .first()  # O(1): the argmax pair only, never data rows
+        )
+        if top is None:
+            break
+        a, b, cnt = top["p"]["a"], top["p"]["b"], int(top["cnt"])
+        merges.append((rank, a, b, a + b, cnt))
+        vocab = vocab.select(
+            F.expr(
+                _MERGE_FOLD.format(col="syms", a=a, b=b, ab=a + b)
+            ).alias("syms"),
+            "freq",
+        ).localCheckpoint()
     return merges
 
 
@@ -276,7 +261,7 @@ def bpe_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
     merges = [
         (left, right)
-        for _, left, right, _, _ in _train_merges(spark, docs, 8)
+        for _, left, right, _, _ in _train_merges(docs, 8)
     ]
     seg = bpe_segment(docs, merges)
     words = F.expr(

@@ -40,6 +40,7 @@ from cricket_analytics_nosql_spark.operators.text import (
     shingles_col,
     tokens_col,
 )
+from cricket_analytics_nosql_spark.session import fixed_plan, loop_partitions
 from cricket_analytics_nosql_spark.sources.tables import fan_out, load_table
 
 
@@ -752,19 +753,12 @@ def connected_components(
         .observe(e_obs, F.count(F.lit(1)).alias("m"))
         .localCheckpoint()
     )
-    # Size the loop's shuffles from the measured edge count and turn
-    # AQE off inside it — the same fixed-plan discipline as the
-    # PageRank loop (graph.py): at local/test scale per-round cost is
-    # task-launch-bound (32 partitions on KB frames = pure overhead),
-    # at cluster scale the same formula keeps partitions in-memory.
-    spark = pairs.sparkSession
+    # The loop runs under session.fixed_plan, sized from the measured
+    # edge count — the PageRank loop discipline (graph.py): with AQE
+    # on, the keyed sym checkpoint below would lose its key.
     m = int(e_obs.get["m"])
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    loop_parts = max(2, m // 150_000)
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    loop_parts = loop_partitions(m)
+    with fixed_plan(pairs.sparkSession, loop_parts):
         # Re-checkpoint the symmetric edge list hash-partitioned on
         # the propagation key (round 11, the pagerank links
         # treatment): the first checkpoint can't be keyed — it is
@@ -779,9 +773,6 @@ def connected_components(
         if m >= _CC_KEYED_SYM_MIN_EDGES:
             sym = sym.repartition(loop_parts, F.col("b")).localCheckpoint()
         labels = _cc_loop(sym, max_iter)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return labels.select(
         F.col("a").alias("doc_id"), F.col("label").alias("cluster_id")
     )
@@ -805,38 +796,44 @@ def _cc_loop(sym: DataFrame, max_iter: int) -> DataFrame:
         .localCheckpoint()
     )
     for _ in range(max_iter - 1):
-        neighbor_min = (
-            sym.join(
-                labels.select(
-                    F.col("a").alias("b"), F.col("label").alias("nl")
-                ),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.min("nl").alias("minn"))
-        )
         obs = Observation()
-        labels = (
-            labels.join(neighbor_min, "a", "left")
-            .select(
-                "a",
-                F.col("label").alias("old"),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("minn"), F.col("label"))
-                ).alias("label"),
-            )
-            .observe(
-                obs,
-                F.sum((F.col("label") != F.col("old")).cast("long")).alias(
-                    "changed"
-                ),
-            )
-            .select("a", "label")
-            .localCheckpoint()
-        )
+        labels = _cc_round(sym, labels, obs).localCheckpoint()
         if int(obs.get["changed"] or 0) == 0:
             break
     return labels
+
+
+def _cc_round(
+    sym: DataFrame, labels: DataFrame, obs: Observation
+) -> DataFrame:
+    """One min-label propagation round, unmaterialized: each vertex
+    takes the least of its label and its neighbors' labels. The count
+    of changed labels is observed into ``obs`` on the same job."""
+    neighbor_min = (
+        sym.join(
+            labels.select(F.col("a").alias("b"), F.col("label").alias("nl")),
+            "b",
+        )
+        .groupBy("a")
+        .agg(F.min("nl").alias("minn"))
+    )
+    return (
+        labels.join(neighbor_min, "a", "left")
+        .select(
+            "a",
+            F.col("label").alias("old"),
+            F.least(
+                F.col("label"), F.coalesce(F.col("minn"), F.col("label"))
+            ).alias("label"),
+        )
+        .observe(
+            obs,
+            F.sum((F.col("label") != F.col("old")).cast("long")).alias(
+                "changed"
+            ),
+        )
+        .select("a", "label")
+    )
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.operators.spec import QuerySpec
+from cricket_analytics_nosql_spark.session import fixed_plan, loop_partitions
 from cricket_analytics_nosql_spark.sources.tables import load_table
 
 
@@ -167,14 +168,11 @@ def pagerank(
     Σ_j |Δa_j|·S_j (all w_j ≥ 0) — a free driver-side bound, checked
     every ``check_every`` rounds; no probe jobs at all.
 
-    Inside the loop, adaptive execution is pure per-iteration
-    overhead — every AQE stage materialization is an extra scheduler
-    round-trip, and the loop's plans are fully known: the contrib
-    shuffle is vertex-sized, so its partition count is sized directly
-    from the measured edge count (~500k rows ≈ 8 MB per partition)
-    instead of discovered adaptively. AQE-off + fixed-plan measured
-    at sf0.1: ~0.14 s/iteration vs ~0.45 s with either AQE or the
-    literal recompile in play. Confs are restored after the loop.
+    The loop runs under ``session.fixed_plan`` (AQE off, shuffle
+    partitions = ``loop_partitions(m)``): under AQE Spark 4.1 reports
+    an adaptive plan's partitioning as unknown, so the keyed link
+    checkpoint below would lose its key and every round would
+    re-shuffle it (measured cost in ``fixed_plan``'s docstring).
 
     Lineage discipline (SURVEY §7.8 risk 1): every w_j is
     ``localCheckpoint``-ed — each is small (one row per in-linked
@@ -200,20 +198,13 @@ def pagerank(
     if m == 0:
         return spark.createDataFrame([], "id long, pagerank double")
 
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # One knob sizes BOTH sides of the per-round job: the link scan's
     # task count (links are repartitioned to this below) and the
-    # contrib shuffle. Locally the loop is task-launch-bound, so
-    # fewer/fatter partitions win (measured at 1.2M edges on
-    # local[32]: 8 parts ≈ 0.23 s/round vs 64 natural ≈ 0.35 s); at
-    # cluster scale the same formula (~150k edge rows ≈ 5 MB per
-    # task) keeps partitions comfortably in-memory.
-    loop_parts = max(2, m // 150_000)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
+    # contrib shuffle (measured at 1.2M edges on local[32]: 8 parts ≈
+    # 0.23 s/round vs 64 natural ≈ 0.35 s).
+    loop_parts = loop_partitions(m)
     d = float(damping)
-    try:
+    with fixed_plan(spark, loop_parts):
         if weight_col is None:
             out_mass = edges.groupBy("src").agg(
                 F.count(F.lit(1)).cast("double").alias("w_out")
@@ -330,27 +321,15 @@ def pagerank(
                 loop_parts, F.col("id")
             ).localCheckpoint()
 
-        def apply_a(x: DataFrame) -> tuple[DataFrame, float]:
-            """w(dst) = Σ x(src)·p(src→dst) over in-edges (p is the
-            precomputed transition ratio: 1/out_deg unweighted,
-            w/Σw(src) weighted); returns (checkpointed w, Σw) — Σ
-            observed on the pre-agg rows of the same job."""
-            obs = Observation()
-            w = (
-                links.join(maybe_bcast(x.withColumnRenamed("dst", "id")), "id")
-                .select("dst", (F.col("x") * F.col("p")).alias("c"))
-                .observe(obs, F.sum("c").alias("s"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("x"))
-                .localCheckpoint()
-            )
-            return w, float(obs.get["s"] or 0.0)
-
         for i in range(1, max_iter):
             dm = float(n) - sum(a * s for a, s in zip(coef, sums))
             base = (1.0 - d) + d * dm / float(n)
             if not exhausted:
-                w_next, s_next = apply_a(ws[-1])
+                obs = Observation()
+                w_next = _pagerank_round(
+                    links, ws[-1], obs, small
+                ).localCheckpoint()
+                s_next = float(obs.get["s"] or 0.0)
                 if s_next == 0.0:
                     exhausted = True  # zero frame: drop it, and all later
                 else:
@@ -369,9 +348,6 @@ def pagerank(
                     break
             else:
                 coef = new_coef
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     dm = float(n) - sum(a * s for a, s in zip(coef, sums))
     base = (1.0 - d) + d * dm / float(n)
@@ -398,6 +374,25 @@ def pagerank(
                 + F.lit(d) * F.coalesce(F.col("contrib"), F.lit(0.0))
             ).alias("pagerank"),
         )
+    )
+
+
+def _pagerank_round(
+    links: DataFrame, x: DataFrame, obs: Observation, broadcast: bool
+) -> DataFrame:
+    """One PageRank power round, unmaterialized: w(dst) = Σ
+    x(src)·p(src→dst) over in-edges (p is the precomputed transition
+    ratio: 1/out_deg unweighted, w/Σw(src) weighted). Σw is observed
+    into ``obs`` on the pre-agg rows of the same job. ``broadcast``
+    picks the small-graph plan (x broadcast into the dst-keyed link
+    table) over the co-partitioned one (links keyed by id)."""
+    xs = x.withColumnRenamed("dst", "id")
+    return (
+        links.join(F.broadcast(xs) if broadcast else xs, "id")
+        .select("dst", (F.col("x") * F.col("p")).alias("c"))
+        .observe(obs, F.sum("c").alias("s"))
+        .groupBy("dst")
+        .agg(F.sum("c").alias("x"))
     )
 
 
@@ -3434,9 +3429,10 @@ def scc_dominance_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     before any graph logic. The transitive closure then runs on
     that ≤625-row frame as log₂(diameter) successor-doubling
     self-joins (5 rounds covers any 25-node path), each a tiny
-    equi-join under fixed 2-partition shuffles with AQE off and
-    per-round localCheckpoint (the pagerank loop discipline) —
-    driver never sees an edge. SCC labels come from the closure by
+    equi-join under ``session.fixed_plan`` (AQE off, 2 shuffle
+    partitions = ``loop_partitions`` of ≤625 rows) with per-round
+    localCheckpoint (the pagerank loop discipline) — driver never
+    sees an edge. SCC labels come from the closure by
     the mutual-reachability join: scc(a) = min{b : a↝b ∧ b↝a} ∪ {a}.
 
     Reference parity: extends the Cypher graph analytics family
@@ -3466,21 +3462,13 @@ def scc_dominance_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("w") > F.coalesce(F.col("w_rev"), F.lit(0)))
         .select(F.col("src_n").alias("a"), F.col("dst_n").alias("b"))
     )
-    spark_ = spark
-    prev_aqe = spark_.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_parts = spark_.conf.get("spark.sql.shuffle.partitions")
-    spark_.conf.set("spark.sql.adaptive.enabled", "false")
-    spark_.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
+    with fixed_plan(spark, loop_partitions(25 * 25)):
         reach = dom.localCheckpoint()
         for _ in range(5):  # doubling: paths up to 2^5 = 32 > 25 nodes
             step = reach.alias("r1").join(
                 reach.alias("r2"), F.col("r1.b") == F.col("r2.a")
             ).select(F.col("r1.a").alias("a"), F.col("r2.b").alias("b"))
             reach = reach.union(step).distinct().localCheckpoint()
-    finally:
-        spark_.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark_.conf.set("spark.sql.shuffle.partitions", prev_parts)
     mutual = reach.alias("f").join(
         reach.alias("g"),
         (F.col("f.a") == F.col("g.b")) & (F.col("f.b") == F.col("g.a")),

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.functions.scalar import flag
 from cricket_analytics_nosql_spark.operators.spec import QuerySpec
+from cricket_analytics_nosql_spark.session import loop_partitions
 from cricket_analytics_nosql_spark.sources.tables import fan_out, load_table
 
 N_QUERIES = 8  # vec_id < 8 is the demo query set
@@ -701,7 +702,7 @@ def _assign_with_radii(
     dim: int,
     vcol: str = "v",
     literal_max: int = ARGMIN_LITERAL_MAX_SCALARS,
-) -> tuple[DataFrame, dict[int, float]]:
+) -> tuple[DataFrame, dict[int, float], dict[int, int]]:
     """Cell assignment AND per-cell angular radii in ONE corpus pass
     (round 12, guide §5/§1.5): the radius r_cell = max θ(member,
     centroid) rides the assignment checkpoint job as an Observation
@@ -717,7 +718,10 @@ def _assign_with_radii(
     absorbs with two orders of magnitude to spare — the prune only
     needs a CONSERVATIVE upper bound, and emitted pairs are exact
     regardless (every candidate is re-verified with the original
-    JVM expression).
+    JVM expression). A zero norm (zero centroid or zero vector)
+    leaves the angle undefined: the division yields NULL rather than
+    raising under ANSI, and the clamp turns it into θ = π, the
+    widest possible radius.
 
     Returns ``(assigned, radii, sizes)``: ``assigned`` is the
     checkpointed (…, cell) frame (same schema as ``assign_cells``
@@ -754,9 +758,9 @@ def _assign_with_radii(
         cell_th = (
             f"element_at(transform(array({sc}), sc -> struct("
             f"sc.c AS cell, "
-            f"acos(least(1.0D, greatest(-1.0D, "
-            f"((element_at({n2_map}, sc.c) - sc.s) * 0.5D) "
-            f"/ (sqrt({vnorm2}) * sqrt(element_at({n2_map}, sc.c)))"
+            f"acos(least(1.0D, greatest(-1.0D, try_divide("
+            f"(element_at({n2_map}, sc.c) - sc.s) * 0.5D, "
+            f"sqrt({vnorm2}) * sqrt(element_at({n2_map}, sc.c)))"
             f"))) AS th)), 1)"
         )
         based = emb.withColumn("__a", F.expr(cell_th))
@@ -785,8 +789,8 @@ def _assign_with_radii(
         cell_th = (
             f"element_at(transform(array({amin}), sc -> struct("
             f"sc.c AS cell, "
-            f"acos(least(1.0D, greatest(-1.0D, "
-            f"((sc.n2 - sc.s) * 0.5D) / (sqrt({vnorm2}) * sqrt(sc.n2))"
+            f"acos(least(1.0D, greatest(-1.0D, try_divide("
+            f"(sc.n2 - sc.s) * 0.5D, sqrt({vnorm2}) * sqrt(sc.n2))"
             f"))) AS th)), 1)"
         )
         based = (
@@ -1223,7 +1227,8 @@ def _concurrent_frames(*thunks) -> list:
     and the first raised exception propagates. Used where a query's
     pipeline forks into independent corpus-scale branches that meet
     only at a tiny final join (the ANN audits: exact truth vs the
-    method's candidates)."""
+    method's candidates). Thunks share the session, so none may
+    enter ``session.fixed_plan`` (which pins session-wide confs)."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
@@ -1915,8 +1920,11 @@ def exact_cosine_pairs(
             cosm = (cmat @ cmat.T) / np.outer(nrm, nrm)
         theta = np.arccos(np.clip(cosm, -1.0, 1.0))
         rv = np.asarray([radii[c] for c in live])
-        # NaN (zero-norm centroid) compares False → excluded, the
-        # same outcome as the old NULL-yielding JVM division
+        # a zero-norm centroid has no direction, so its θ is NaN and
+        # bounds nothing: take θ = 0, which keeps every pair with
+        # that cell (a NaN would compare False and silently drop
+        # them, the cell's own diagonal block included)
+        theta = np.where(np.isfinite(theta), theta, 0.0)
         ok = theta - rv[:, None] - rv[None, :] <= theta_tau + 1e-6
         cand = [
             (live[i], live[j])
@@ -1987,33 +1995,25 @@ def exact_cosine_pairs(
         hi = np.maximum(a_ids[ii], b_ids[jj])
         return pd.DataFrame({"v1": lo, "v2": hi})
 
-    # The block exchange's partition count is sized from the
-    # MEASURED replicated-row count (Σ |cell|·roles(cell), exact
+    # The block exchange is an explicit keyed repartition sized from
+    # the MEASURED replicated-row count (Σ |cell|·roles(cell), exact
     # from the assignment job's Observation) — the CC/pagerank
-    # ~150k-rows-per-task discipline — and the GEMM materializes
-    # under that pinned conf (restored after). Inherited session
-    # sizing ran this KB-scale exchange through 32 tasks at bench
-    # scale — measured 3.15 → 2.6 s for the pipeline at sf0.1 — and
-    # at cluster scale the same formula keeps block tasks in-memory.
-    # The checkpoint is pair-sized (the near-dup band), and the
-    # re-verify broadcast below reads it materialized.
+    # ``loop_partitions`` sizing; the grouped GEMM then reads it in
+    # place. Inherited session sizing ran this KB-scale exchange
+    # through 32 tasks at bench scale — measured 3.15 → 2.6 s for the
+    # pipeline at sf0.1 — and at cluster scale the same formula keeps
+    # block tasks in-memory. The checkpoint is pair-sized (the
+    # near-dup band), and the re-verify broadcast below reads it
+    # materialized.
     sides_rows = sum(
         sizes.get(c, 0) * len(rs) for c, rs in roles.items()
     )
-    spark = emb.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(max(2, sides_rows // 150_000)),
+    cand_pairs = (
+        sides.repartition(loop_partitions(sides_rows), "c1", "c2")
+        .groupBy("c1", "c2")
+        .applyInPandas(_gemm_block, "v1 long, v2 long")
+        .localCheckpoint()
     )
-    try:
-        cand_pairs = (
-            sides.groupBy("c1", "c2")
-            .applyInPandas(_gemm_block, "v1 long, v2 long")
-            .localCheckpoint()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     # exact re-verify of the (near-dup-sized) survivor band with the
     # ORIGINAL JVM expression: pair frame broadcasts, corpus streams.
     # Both probes read the assignment CHECKPOINT (same vec_id/v

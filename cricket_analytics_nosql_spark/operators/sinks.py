@@ -246,15 +246,14 @@ def write_partition_overwrite(
     overwrite). THE idempotent reprocessing primitive at 100 TB — a
     failed day's pipeline reruns against just that day's partition;
     a static overwrite would wipe the whole dataset, an append would
-    double-count. Session-conf scoped to the write and restored."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set(key, old)
+    double-count. The mode is a per-write option; the session conf
+    is never touched."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
 
 
 def read_new_partitions(

@@ -1043,8 +1043,10 @@ def lm_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver where the old shuffle join degraded gracefully. Two-tier
     # gate, costing the bench plan nothing: below the input-size gate
     # (Catalyst scan estimate, no job) the bigram-type count is
-    # PROVABLY broadcast-safe (types ≤ bigram tokens ≤ input bytes),
-    # so broadcast directly — the sf0.1 bench corpus is ~0.6 MB and
+    # heuristically broadcast-safe (types ≤ bigram tokens, and tokens
+    # track input bytes — but the estimate is of compressed on-disk
+    # bytes, so this is a heuristic bound, not a proof), so
+    # broadcast directly — the sf0.1 bench corpus is ~0.6 MB and
     # keeps its exact round-11 plan. Above it, materialize the
     # vocabulary-sized LM once with its type count observed on the
     # same job (at that scale the probe pass wants a materialized

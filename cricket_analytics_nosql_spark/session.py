@@ -10,6 +10,8 @@ Pandas-UDF slow path.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -72,3 +74,42 @@ def configure_session(spark: SparkSession) -> SparkSession:
             str(spark.sparkContext.defaultParallelism),
         )
     return spark
+
+
+def loop_partitions(rows: int) -> int:
+    """Partition count for an iterative loop's exchanges, sized from
+    a measured row count: ~150k rows per task. Locally the loops are
+    task-launch-bound, so few fat partitions win; at cluster scale
+    the same formula keeps each partition comfortably in memory."""
+    return max(2, rows // 150_000)
+
+
+@contextmanager
+def fixed_plan(spark: SparkSession, n: int) -> Iterator[None]:
+    """Plan with AQE off and ``n`` shuffle partitions inside the
+    scope; both confs are restored on exit, normal or not.
+
+    Why AQE must be off: Spark 4.1 reports ``UnknownPartitioning(0)``
+    for an adaptive plan, so under AQE a
+    ``repartition(n, key).localCheckpoint()`` loses its key and every
+    round of a loop over that checkpoint re-shuffles it. Measured on
+    the 150-match bench warehouse, PageRank cost 1.96 s / 36 jobs per
+    call with the loop under this scope, 2.32 s / 39 jobs with AQE on
+    in the loop (keyed checkpoints still built with AQE off), and
+    2.63 s / 55 jobs with AQE on throughout. The loop plans are fully
+    known in advance, so there is nothing left for AQE to adapt.
+
+    The confs are session-wide: never enter this scope from a
+    ``similarity._concurrent_frames`` thunk, or from any other code
+    that runs while a sibling thread plans queries on the same
+    session — the sibling would plan under (and the restore would
+    race with) the pinned values."""
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)

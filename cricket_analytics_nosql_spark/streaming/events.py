@@ -23,14 +23,17 @@ exactly like any other shuffle.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from cricket_analytics_nosql_spark.operators.spec import QuerySpec
+from cricket_analytics_nosql_spark.session import fixed_plan
 from cricket_analytics_nosql_spark.sources.tables import load_table
 
 _EVENT_SCHEMA = (
@@ -118,9 +121,10 @@ def read_events_stream(
     )
 
 
-def run_available_now(sdf: DataFrame, output_mode: str = "append") -> DataFrame:
-    """Drain a streaming frame deterministically (availableNow) into
-    a memory sink; return the result as a batch DataFrame.
+def _drain(sdf: DataFrame, writer: DataStreamWriter) -> None:
+    """Run ``writer`` (a configured ``sdf.writeStream``) once over
+    everything available (availableNow) against a throwaway
+    checkpoint, and wait for it to finish.
 
     LOCAL masters only: the state store is sized down to ≤ 8
     partitions for the drain. Stateful operators instantiate one
@@ -129,31 +133,31 @@ def run_available_now(sdf: DataFrame, output_mode: str = "append") -> DataFrame:
     setup/commit per batch for no parallelism gain (the per-query
     checkpoint is fresh, so the narrower sizing never conflicts with
     an existing state layout; results are partitioning-invariant).
-    Cluster sessions keep their configured parallelism — there the
-    state genuinely needs it."""
+    Streams already plan with AQE off, so ``fixed_plan`` changes only
+    the partition count. Cluster sessions keep their configured
+    parallelism — there the state genuinely needs it."""
     spark = sdf.sparkSession
+    scope = contextlib.nullcontext()
+    if spark.sparkContext.master.startswith("local"):
+        parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        scope = fixed_plan(spark, min(parts, 8))
+    with scope, tempfile.TemporaryDirectory(prefix="ckpt_") as ckpt:
+        writer.option(
+            "checkpointLocation", os.path.join(ckpt, "cp")
+        ).trigger(availableNow=True).start().awaitTermination()
+
+
+def run_available_now(sdf: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Drain a streaming frame deterministically (availableNow) into
+    a memory sink; return the result as a batch DataFrame."""
     name = "s" + uuid.uuid4().hex[:12]
-    local = spark.sparkContext.master.startswith("local")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if local:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(min(int(prev), 8))
-        )
-    try:
-        with tempfile.TemporaryDirectory(prefix="ckpt_") as ckpt:
-            q = (
-                sdf.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", os.path.join(ckpt, "cp"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if local:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+    _drain(
+        sdf,
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode),
+    )
+    return sdf.sparkSession.table(name)
 
 
 def foreach_batch_upsert(
@@ -186,27 +190,7 @@ def foreach_batch_upsert(
         # atomic-ish swap: rewrite target from the merged view
         spark.read.parquet(path + "_next").write.mode("overwrite").parquet(path)
 
-    # same local-master state-store sizing as run_available_now
-    spark = sdf.sparkSession
-    local = spark.sparkContext.master.startswith("local")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if local:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(min(int(prev), 8))
-        )
-    try:
-        with tempfile.TemporaryDirectory(prefix="ckpt_") as ckpt:
-            q = (
-                sdf.writeStream.foreachBatch(upsert)
-                .outputMode(output_mode)
-                .option("checkpointLocation", os.path.join(ckpt, "cp"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if local:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(sdf, sdf.writeStream.foreachBatch(upsert).outputMode(output_mode))
 
 
 # ---------------------------------------------------------------------------

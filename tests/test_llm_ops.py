@@ -344,10 +344,7 @@ def test_exact_cosine_pairs_equals_all_pairs_and_prunes(spark):
     clustered data where the angular cell prune genuinely fires."""
     import numpy as np
 
-    from pyspark.sql import functions as F
-
     from cricket_analytics_nosql_spark.operators.similarity import (
-        cosine,
         exact_cosine_pairs,
     )
 
@@ -369,17 +366,62 @@ def test_exact_cosine_pairs_equals_all_pairs_and_prunes(spark):
         (r.v1, r.v2)
         for r in exact_cosine_pairs(emb, tau=tau, k=6).collect()
     }
+    want = _all_cosine_pairs(emb, tau)
+    assert got == want
+    assert len(want) > 100  # the clusters actually produce near-dups
+
+
+def _all_cosine_pairs(emb, tau):
+    """The brute-force reference: every (v1 < v2) pair with rounded
+    cosine ≥ τ."""
+    from cricket_analytics_nosql_spark.operators.similarity import cosine
+
     a = emb.select(F.col("vec_id").alias("v1"), F.col("v").alias("va"))
     b = emb.select(F.col("vec_id").alias("v2"), F.col("v").alias("vb"))
-    want = {
+    return {
         (r.v1, r.v2)
         for r in a.crossJoin(b)
         .filter(F.col("v1") < F.col("v2"))
         .filter(F.round(cosine(F.col("va"), F.col("vb")), 6) >= tau)
         .collect()
     }
+
+
+def test_exact_cosine_pairs_zero_norm_centroid(spark):
+    """A zero centroid has no direction, so the cell-pair prune's
+    angle to it is undefined; it must keep that cell's blocks (the
+    diagonal included) rather than drop them, and the radius pass
+    must not raise on the 0/0 angle of its members."""
+    import numpy as np
+
+    from cricket_analytics_nosql_spark.operators.similarity import (
+        exact_cosine_pairs,
+    )
+
+    rng = np.random.RandomState(11)
+    anchors = rng.randn(3, 8) * 4
+    rows = [
+        (i * 20 + j, (a + rng.randn(8) * 0.3).tolist())
+        for i, a in enumerate(anchors)
+        for j in range(20)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    # cell 1 sits on anchor 0; the other two clusters score best
+    # against the zero centroid (‖0‖² − 2v·0 = 0 beats ‖c‖² − 2v·c)
+    cents = spark.createDataFrame(
+        [(0, [0.0] * 8), (1, anchors[0].tolist())],
+        "cell int, centroid array<double>",
+    )
+    tau = 0.9
+    got = {
+        (r.v1, r.v2)
+        for r in exact_cosine_pairs(
+            emb, tau=tau, centroids=cents, dim=8
+        ).collect()
+    }
+    want = _all_cosine_pairs(emb, tau)
     assert got == want
-    assert len(want) > 100  # the clusters actually produce near-dups
+    assert len(want) > 200  # pairs inside the zero centroid's cell
 
 
 def test_chunking_reconstructs_documents(spark):

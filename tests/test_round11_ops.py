@@ -21,10 +21,12 @@ from __future__ import annotations
 import random
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.operators import similarity as S
 from cricket_analytics_nosql_spark.operators.text import lm_surprisal
+from cricket_analytics_nosql_spark.session import fixed_plan
 from cricket_analytics_nosql_spark.sources.tables import load_table
 
 
@@ -84,12 +86,11 @@ def test_pagerank_loop_round_is_single_stage(spark, sf_small):
     checkpointed hash-partitioned by dst → groupBy('dst') aggregates
     in place (round-11 shape; 2 Exchange → 1, the broadcast)."""
     from cricket_analytics_nosql_spark.operators.graph import (
+        _pagerank_round,
         trade_graph_edges,
     )
 
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with fixed_plan(spark, 4):
         edges = trade_graph_edges(spark, sf_small).localCheckpoint()
         out_mass = edges.groupBy("src").agg(
             F.count(F.lit(1)).cast("double").alias("w_out")
@@ -110,17 +111,10 @@ def test_pagerank_loop_round_is_single_stage(spark, sf_small):
             .agg(F.sum("c").alias("x"))
             .localCheckpoint()
         )
-        one_round = (
-            links.join(F.broadcast(w.withColumnRenamed("dst", "id")), "id")
-            .select("dst", (F.col("x") * F.col("p")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("x"))
-        )
+        one_round = _pagerank_round(links, w, Observation(), broadcast=True)
         plan = one_round._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert "BroadcastExchange" in plan
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "BroadcastExchange" in plan
 
 
 def test_lm_surprisal_fact_stream_never_shuffles(spark, sf_small):

@@ -24,11 +24,13 @@ from __future__ import annotations
 import random
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.operators import sequences as SQ
 from cricket_analytics_nosql_spark.operators import similarity as S
 from cricket_analytics_nosql_spark.operators import text as T
+from cricket_analytics_nosql_spark.session import fixed_plan
 from cricket_analytics_nosql_spark.sources.tables import load_table
 
 
@@ -144,17 +146,13 @@ def test_pagerank_big_graph_loop_round_exchanges_are_vertex_sized(
     co-partitioned join) and the post-partial-agg contrib rows (by
     dst) — never the edge list itself."""
     from cricket_analytics_nosql_spark.operators.graph import (
+        _pagerank_round,
         trade_graph_edges,
     )
 
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # replicate the loop's config exactly: shuffle partitions ==
-    # loop_parts == the links repartition count, so every frame in
-    # the loop shares one partitioning scheme (pagerank() pins this)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    # shuffle partitions == loop_parts == the links repartition count,
+    # so every frame in the loop shares one partitioning scheme
+    with fixed_plan(spark, 4):
         edges = trade_graph_edges(spark, sf_small).localCheckpoint()
         out_mass = edges.groupBy("src").agg(
             F.count(F.lit(1)).cast("double").alias("w_out")
@@ -177,38 +175,31 @@ def test_pagerank_big_graph_loop_round_exchanges_are_vertex_sized(
             .agg(F.sum("c").alias("x"))
             .localCheckpoint()
         )
-        one_round = (
-            links.join(w.withColumnRenamed("dst", "id"), "id")
-            .select("dst", (F.col("x") * F.col("p")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("x"))
-        )
+        one_round = _pagerank_round(links, w, Observation(), broadcast=False)
         plan = one_round._jdf.queryExecution().executedPlan().toString()
-        # ONE hash exchange in the whole round: the contrib
-        # partial-agg rows by dst (vertex-sized). The join is
-        # exchange-free — links' checkpoint is keyed by id and w's
-        # groupBy(dst) partitioning carries through the dst→id
-        # rename — so the edge list never re-shuffles.
-        assert plan.count("Exchange hashpartitioning") == 1, plan
-        assert "Exchange hashpartitioning(dst#" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # ONE hash exchange in the whole round: the contrib partial-agg
+    # rows by dst (vertex-sized). The join is exchange-free — links'
+    # checkpoint is keyed by id and w's groupBy(dst) partitioning
+    # carries through the dst→id rename — so the edge list never
+    # re-shuffles.
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Exchange hashpartitioning(dst#" in plan, plan
 
 
-def test_cc_keyed_loop_round_exchanges_are_label_sized(spark, sf_small):
+def test_cc_keyed_loop_round_exchanges_are_label_sized(spark):
     """VERDICT r11 item 6, CC side: with the symmetric edge list
     checkpointed hash-partitioned on the propagation key b, a loop
     round exchanges only label-sized frames (labels by b into the
     join, per-a minima into the agg) — the edge list itself never
     re-shuffles."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # replicate connected_components' loop config: shuffle partitions
-    # == loop_parts == the sym repartition count
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
+    from cricket_analytics_nosql_spark.operators.dedup import (
+        _cc_loop,
+        _cc_round,
+    )
+
+    # connected_components' loop scope: shuffle partitions ==
+    # loop_parts == the sym repartition count
+    with fixed_plan(spark, 2):
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (7, 9), (3, 5)], "d1 long, d2 long"
         )
@@ -229,29 +220,13 @@ def test_cc_keyed_loop_round_exchanges_are_label_sized(spark, sf_small):
             .repartition(2, F.col("b"))
             .localCheckpoint()
         )
-        labels = (
-            sym.groupBy("a")
-            .agg(F.least(F.col("a"), F.min("b")).alias("label"))
-            .localCheckpoint()
-        )
-        one_round = (
-            sym.join(
-                labels.select(
-                    F.col("a").alias("b"), F.col("label").alias("nl")
-                ),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.min("nl").alias("minn"))
-        )
+        labels = _cc_loop(sym, max_iter=1)  # the fused init round only
+        one_round = _cc_round(sym, labels, Observation())
         plan = one_round._jdf.queryExecution().executedPlan().toString()
-        # ONE hash exchange in the whole round, label-sized: the
-        # per-a minima agg. The join is exchange-free — sym's
-        # checkpoint is keyed by b and labels' groupBy(a)
-        # partitioning carries through the a→b rename — so the edge
-        # list never re-shuffles.
-        assert plan.count("Exchange hashpartitioning") == 1, plan
-        assert "Exchange hashpartitioning(a#" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # ONE hash exchange in the whole round, label-sized: the per-a
+    # minima agg. The join is exchange-free — sym's checkpoint is
+    # keyed by b and labels' groupBy(a) partitioning carries through
+    # the a→b rename — so the edge list never re-shuffles, and the
+    # label update joins two a-partitioned frames in place.
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Exchange hashpartitioning(a#" in plan, plan
