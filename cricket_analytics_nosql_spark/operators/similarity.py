@@ -5,10 +5,14 @@ BASELINE.md mandate, over the ``embeddings`` table
 Three paths, by scale posture:
 
 - **Brute-force top-k** (the baseline + the oracle): broadcast the
-  (small) query set against every vector; dot/norms via
-  ``zip_with`` + ``aggregate`` — JVM-side, whole-stage-codegen'd,
-  no Python in the loop. O(Q·N) but embarrassingly parallel and
-  shuffle-free until the per-query top-k (window over Q partitions).
+  (small) query set against every vector; each vector's norm is a
+  per-row ``vnorm`` and the pair cosine is ``cos6`` — an unrolled
+  fixed-dim dot that whole-stage codegen compiles (the generic
+  ``zip_with`` + ``aggregate`` fold in ``dot``/``cosine`` runs in
+  the interpreted higher-order evaluator and serves runtime
+  dimensions only). JVM-side, no Python in the loop. O(Q·N) but
+  embarrassingly parallel and shuffle-free until the per-query
+  top-k (window over Q partitions).
 - **IVF** (scale path #1): coarse-quantize vectors into partitions
   (here the given ``label`` as the cell id — stand-in for k-means
   cells), keep a tiny centroid table, probe only the ``nprobe``
@@ -57,44 +61,37 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
-def _dot_sql(a: str, b: str, dim: int) -> str:
-    """The unrolled dot product as ONE SQL string — same
-    ((0.0 + t1) + t2) + … left-assoc chain as the Column form."""
-    return "0.0D + " + " + ".join(
-        f"element_at({a}, {i + 1}) * element_at({b}, {i + 1})"
-        for i in range(dim)
-    )
-
-
-def dot_unrolled(a: Column | str, b: Column | str, dim: int) -> Column:
-    """``dot`` with the fold unrolled to plain element_at sums —
-    IDENTICAL left-to-right accumulation (same IEEE result, starts
-    at 0.0) but whole-stage-codegen instead of the interpreted
-    higher-order evaluator. For statically-known ``dim`` on hot
-    pair streams.
-
-    Pass column NAMES (strings) where possible: the expression is
-    then built as one ``F.expr`` parse in the JVM instead of ~5·dim
-    py4j round-trips — identical tree, but the driver-side build
-    drops from ~0.5 s to ~1 ms at dim=64, which matters inside
-    iterative loops (k-means, PQ) that rebuild it per round."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(a, b, dim))
-    out: Column = F.lit(0.0)
-    for i in range(dim):
-        out = out + F.element_at(a, i + 1) * F.element_at(b, i + 1)
-    return out
-
-
-def cosine_unrolled(a: Column | str, b: Column | str, dim: int) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            f"({_dot_sql(a, b, dim)}) / (sqrt({_dot_sql(a, a, dim)})"
-            f" * sqrt({_dot_sql(b, b, dim)}))"
+def dot_unrolled(a: str, b: str, dim: int) -> Column:
+    """``dot`` over the columns NAMED ``a`` and ``b`` with the fold
+    unrolled to plain element_at sums — the same ((0.0 + t1) + t2) + …
+    left-to-right chain (same IEEE result) but whole-stage-codegen
+    instead of the interpreted higher-order evaluator. For statically
+    known ``dim`` on hot pair streams. Built as ONE ``F.expr`` parse
+    in the JVM: ~1 ms at dim=64 instead of ~5·dim py4j round-trips,
+    which matters inside loops (k-means, PQ) that rebuild it."""
+    return F.expr(
+        "0.0D + "
+        + " + ".join(
+            f"element_at({a}, {i + 1}) * element_at({b}, {i + 1})"
+            for i in range(dim)
         )
-    return dot_unrolled(a, b, dim) / (
-        F.sqrt(dot_unrolled(a, a, dim)) * F.sqrt(dot_unrolled(b, b, dim))
     )
+
+
+def vnorm(v: str, dim: int = 64) -> Column:
+    """‖v‖ of the fixed-``dim`` vector column ``v``. A per-ROW value:
+    compute it once per vector, before any pair-forming join, and
+    hand it to ``cos6``."""
+    return F.sqrt(dot_unrolled(v, v, dim))
+
+
+def cos6(a: str, an: str, b: str, bn: str, dim: int = 64) -> Column:
+    """round(a·b / (‖a‖·‖b‖), 6) from vector columns ``a``/``b`` and
+    their precomputed ``vnorm`` columns ``an``/``bn``. The operand
+    order is the DuckDB oracles' ``ROUND(list_inner_product(a, b) /
+    (sqrt(…a) * sqrt(…b)), 6)``, so values hash-compare equal; only
+    the 64-term dot is per pair."""
+    return F.round(dot_unrolled(a, b, dim) / (F.col(an) * F.col(bn)), 6)
 
 
 def _doubles(df: DataFrame) -> DataFrame:
@@ -115,7 +112,7 @@ def ann_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tripling the array math. dot/(qn*vn) is bit-identical to the
     # inline cosine (same operand order), so the oracle still hashes.
     emb = _doubles(load_table(spark, sf_dir, "embeddings")).withColumn(
-        "vn", F.sqrt(dot_unrolled("v", "v", 64))
+        "vn", vnorm("v")
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -128,9 +125,7 @@ def ann_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            F.round(
-                dot_unrolled("q", "v", 64) / (F.col("qn") * F.col("vn")), 6
-            ).alias("cos"),
+            cos6("q", "qn", "v", "vn").alias("cos"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(
@@ -432,7 +427,7 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row.  Output per query: predicate selectivity, post-filter
     survivors, and post-vs-pre recall@5."""
     emb = _doubles(load_table(spark, sf_dir, "embeddings")).withColumn(
-        "vn", F.sqrt(dot_unrolled("v", "v", 64))
+        "vn", vnorm("v")
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -448,9 +443,7 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "target",
             "vec_id",
             "label",
-            F.round(
-                dot_unrolled("q", "v", 64) / (F.col("qn") * F.col("vn")), 6
-            ).alias("cos"),
+            cos6("q", "qn", "v", "vn").alias("cos"),
         )
     )
     wg = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -640,6 +633,27 @@ def _centroid_frame(
 ARGMIN_LITERAL_MAX_SCALARS = 4096
 
 
+def _book_frame(
+    emb: DataFrame, cent_rows: list[tuple[int, list[float]]]
+) -> DataFrame:
+    """The whole codebook as ONE broadcast row — ``__book``, an array
+    of (cell, centroid, n2 = ‖c‖²) structs sorted by cell — for the
+    broadcast form of the cell assignment. ‖c‖² is folded in Python
+    left to right, the same order as the literal form's."""
+    book = emb.sparkSession.createDataFrame(
+        [
+            (
+                [
+                    (int(c), [float(x) for x in v], float(sum(x * x for x in v)))
+                    for c, v in sorted(cent_rows)
+                ],
+            )
+        ],
+        "__book array<struct<cell:int,centroid:array<double>,n2:double>>",
+    )
+    return F.broadcast(book)
+
+
 def assign_cells(
     emb: DataFrame,
     cent_rows: list[tuple[int, list[float]]],
@@ -672,19 +686,7 @@ def assign_cells(
         return emb.withColumn(out, F.lit(None).cast("int"))
     if len(cent_rows) * dim <= literal_max:
         return emb.withColumn(out, _argmin_cell_expr(cent_rows, dim, vcol=vcol))
-    book = emb.sparkSession.createDataFrame(
-        [
-            (
-                [
-                    (int(c), [float(x) for x in v], float(sum(x * x for x in v)))
-                    for c, v in cents_sorted
-                ],
-            )
-            for cents_sorted in [sorted(cent_rows)]
-        ],
-        "__book array<struct<cell:int,centroid:array<double>,n2:double>>",
-    )
-    assigned = emb.crossJoin(F.broadcast(book)).withColumn(
+    assigned = emb.crossJoin(_book_frame(emb, cent_rows)).withColumn(
         out,
         F.expr(
             f"array_min(transform(__book, b -> struct("
@@ -711,39 +713,36 @@ def _assign_with_radii(
 
     The member-centroid angle comes for free from the argmin struct:
     the winning score is s = ‖c‖² − 2·v·c, so v·c = (‖c‖² − s)/2 and
-    cos = (‖c‖² − s)·0.5 / (‖v‖·‖c‖) — one extra ‖v‖ fold per row
-    instead of a second corpus pass. The recovered dot differs from
-    a direct fold by ~1 ulp of ‖c‖² (and acos amplifies that to
-    ~1e-8 near cos = 1), which the cell-pair prune's 1e-6 slack
-    absorbs with two orders of magnitude to spare — the prune only
-    needs a CONSERVATIVE upper bound, and emitted pairs are exact
-    regardless (every candidate is re-verified with the original
-    JVM expression). A zero norm (zero centroid or zero vector)
-    leaves the angle undefined: the division yields NULL rather than
-    raising under ANSI, and the clamp turns it into θ = π, the
-    widest possible radius.
+    cos = (‖c‖² − s)·0.5 / (‖v‖·‖c‖) — ‖v‖ is the row's ``vnorm``,
+    folded once and kept as ``vn`` for the pair re-verify, instead of
+    a second corpus pass. The recovered dot differs from a direct
+    fold by ~1 ulp of ‖c‖² (and acos amplifies that to ~1e-8 near
+    cos = 1), which the cell-pair prune's 1e-6 slack absorbs with two
+    orders of magnitude to spare — the prune only needs a
+    CONSERVATIVE upper bound, and emitted pairs are exact regardless
+    (every candidate is re-verified with ``cos6``). A zero norm
+    (zero centroid or zero vector) leaves the angle undefined: the
+    division yields NULL rather than raising under ANSI, and the
+    clamp turns it into θ = π, the widest possible radius.
 
     Returns ``(assigned, radii, sizes)``: ``assigned`` is the
-    checkpointed (…, cell) frame (same schema as ``assign_cells``
-    output), ``radii`` maps each NON-EMPTY cell to its measured
-    radius (empty cells are absent, matching the old inner-join
-    semantics), and ``sizes`` maps each non-empty cell to its row
-    count — the same job also measures the data the downstream
-    block-replication exchange will carry, so its partition count
-    can be sized from measurement (the CC/pagerank loop-sizing
-    discipline) instead of inherited from the session.
+    checkpointed (…, vn, cell) frame (``assign_cells``' schema plus
+    the ``vn`` norm column), ``radii`` maps each NON-EMPTY cell to
+    its measured radius (empty cells are absent, matching the old
+    inner-join semantics), and ``sizes`` maps each non-empty cell to
+    its row count — the same job also measures the data the
+    downstream block-replication exchange will carry, so its
+    partition count can be sized from measurement (the CC/pagerank
+    loop-sizing discipline) instead of inherited from the session.
 
     Both assignment plan forms are kept (the ``assign_cells`` size
     seam): literal codebook below ``literal_max`` scalars, one
     broadcast array<struct> row past it. Cells are bit-identical to
     ``assign_cells`` — same score fold, same struct-min tie-break.
     """
+    emb = emb.withColumn("vn", vnorm(vcol, dim))
     if not cent_rows:
         return assign_cells(emb, [], dim, vcol=vcol), {}, {}
-    vnorm2 = (
-        f"aggregate(zip_with({vcol}, {vcol}, (x, y) -> x * y), "
-        f"0.0D, (a, p) -> a + p)"
-    )
     if len(cent_rows) * dim <= literal_max:
         # n2 lookup is a k-entry map literal (k scalars — O(k) plan
         # text, not the O(k·dim) codebook the seam guards against)
@@ -760,23 +759,11 @@ def _assign_with_radii(
             f"sc.c AS cell, "
             f"acos(least(1.0D, greatest(-1.0D, try_divide("
             f"(element_at({n2_map}, sc.c) - sc.s) * 0.5D, "
-            f"sqrt({vnorm2}) * sqrt(element_at({n2_map}, sc.c)))"
+            f"vn * sqrt(element_at({n2_map}, sc.c)))"
             f"))) AS th)), 1)"
         )
         based = emb.withColumn("__a", F.expr(cell_th))
     else:
-        book = emb.sparkSession.createDataFrame(
-            [
-                (
-                    [
-                        (int(c), [float(x) for x in v], float(sum(x * x for x in v)))
-                        for c, v in cents_sorted
-                    ],
-                )
-                for cents_sorted in [sorted(cent_rows)]
-            ],
-            "__book array<struct<cell:int,centroid:array<double>,n2:double>>",
-        )
         # min over (s, c, n2): (s, c) decides first and c is unique,
         # so the winner is identical to assign_cells' (s, c) min —
         # n2 just rides along for the angle
@@ -790,11 +777,11 @@ def _assign_with_radii(
             f"element_at(transform(array({amin}), sc -> struct("
             f"sc.c AS cell, "
             f"acos(least(1.0D, greatest(-1.0D, try_divide("
-            f"(sc.n2 - sc.s) * 0.5D, sqrt({vnorm2}) * sqrt(sc.n2))"
+            f"(sc.n2 - sc.s) * 0.5D, vn * sqrt(sc.n2))"
             f"))) AS th)), 1)"
         )
         based = (
-            emb.crossJoin(F.broadcast(book))
+            emb.crossJoin(_book_frame(emb, cent_rows))
             .withColumn("__a", F.expr(cell_th))
             .drop("__book")
         )
@@ -976,7 +963,6 @@ def ivf_topk(
     queries: DataFrame | None = None,
     nprobe: int = 3,
     k: int = TOP_K,
-    centroids: DataFrame | None = None,
     centroid_rows: list[tuple[int, list[float]]] | None = None,
     query_rows: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
@@ -984,33 +970,26 @@ def ivf_topk(
     cosine, exact re-rank within the probed cells. ``centroid_rows``
     (driver-side [(cell, centroid)], normally from
     ``kmeans_fit_rows`` at ingest) makes the corpus assignment a
-    pure literal projection — no exchange; a ``centroids``
-    DataFrame (k metadata rows) is collected down to the same form;
-    when both are omitted, the given ``label`` plays the cell id
-    (the probe dataflow is identical either way). ``query_rows``
-    (driver-side [(q_id, vector)] — the fixed demo query set is
-    O(1) metadata) additionally moves the probe-cell ranking to the
-    driver: |Q|×k numpy cosines replace the crossJoin → window jobs,
-    and the probe table becomes a local frame the cell join
-    broadcasts."""
+    pure literal projection — no exchange; when it is omitted, the
+    given ``label`` plays the cell id (the probe dataflow is
+    identical either way). ``query_rows`` (driver-side
+    [(q_id, vector)] — the fixed demo query set is O(1) metadata)
+    additionally moves the probe-cell ranking to the driver: |Q|×k
+    numpy cosines replace the crossJoin → window jobs, and the probe
+    table becomes a local frame the cell join broadcasts."""
     dim = 64
     # Contract errors surface as ValueError, not an obscure
     # AttributeError deep in the plan build (ADVICE r10): query_rows
     # only short-circuits the probe ranking when the centroid side
     # is also driver-resident, and at least one query form is
     # required.
-    if query_rows is not None and centroids is None and centroid_rows is None:
+    if query_rows is not None and centroid_rows is None:
         raise ValueError(
-            "ivf_topk: query_rows requires centroid_rows (or a "
-            "centroids frame) — the driver-side probe ranking needs "
-            "both sides as metadata"
+            "ivf_topk: query_rows requires centroid_rows — the "
+            "driver-side probe ranking needs both sides as metadata"
         )
     if queries is None and query_rows is None:
         raise ValueError("ivf_topk: pass queries or query_rows")
-    if centroid_rows is None and centroids is not None:
-        centroid_rows = sorted(
-            (r["cell"], list(r["centroid"])) for r in centroids.collect()
-        )
     if centroid_rows is not None:
         centroids = _centroid_frame(emb.sparkSession, centroid_rows)
         emb = assign_cells(emb, centroid_rows, dim)
@@ -1070,15 +1049,14 @@ def ivf_topk(
             .filter(F.col("p") <= nprobe)
             .select("q_id", "q", "cell")
         )
+    # norms per row on each side of the join, never per pair
+    probes = probes.withColumn("qn", vnorm("q"))
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
-        emb.join(F.broadcast(probes), "cell")
+        emb.withColumn("vn", vnorm("v"))
+        .join(F.broadcast(probes), "cell")
         .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            F.round(cosine_unrolled("q", "v", 64), 6).alias("cos"),
-        )
+        .select("q_id", "vec_id", cos6("q", "qn", "v", "vn").alias("cos"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
@@ -1166,11 +1144,12 @@ def ann_lsh_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias(f"b{t}")
         for t in range(n_tables)
     ]
-    hashed = emb.select("vec_id", "v", *sig_cols)
+    hashed = emb.select("vec_id", "v", vnorm("v").alias("vn"), *sig_cols)
     # explode to (vec_id, table, bucket) index rows
     index = hashed.select(
         "vec_id",
         "v",
+        "vn",
         F.posexplode(
             F.array(*[F.col(f"b{t}") for t in range(n_tables)])
         ).alias("table", "bucket"),
@@ -1187,6 +1166,7 @@ def ann_lsh_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
             queries.select(
                 F.col("vec_id").alias("q_id"),
                 F.col("v").alias("q"),
+                F.col("vn").alias("qn"),
                 F.lit(t).alias("table"),
                 F.explode(buckets).alias("bucket"),
             )
@@ -1196,13 +1176,9 @@ def ann_lsh_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         index.join(F.broadcast(probes), ["table", "bucket"])
         .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", F.col("q"), F.col("v"))
+        .select("q_id", "vec_id", "q", "qn", "v", "vn")
         .dropDuplicates(["q_id", "vec_id"])
-        .select(
-            "q_id",
-            "vec_id",
-            F.round(cosine_unrolled("q", "v", 64), 6).alias("cos"),
-        )
+        .select("q_id", "vec_id", cos6("q", "qn", "v", "vn").alias("cos"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
         .orderBy("q_id", "rank")
@@ -1366,7 +1342,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor top-k window), exact cosine, fully SQL-expressible →
     exact oracle."""
     emb = _doubles(load_table(spark, sf_dir, "embeddings")).withColumn(
-        "vn", F.sqrt(dot_unrolled("v", "v", 64))
+        "vn", vnorm("v")
     )
     anchors = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -1383,9 +1359,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("label") == F.col("q_label"), F.lit("pos"))
             .otherwise(F.lit("neg"))
             .alias("role"),
-            F.round(
-                dot_unrolled("q", "v", 64) / (F.col("qn") * F.col("vn")), 6
-            ).alias("cos"),
+            cos6("q", "qn", "v", "vn").alias("cos"),
         )
     )
     w = Window.partitionBy("q_id", "role").orderBy(
@@ -1434,7 +1408,7 @@ def semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts by construction; corpus side is one scan — the
     decontaminate posture on the vector modality."""
     emb = _doubles(load_table(spark, sf_dir, "embeddings")).withColumn(
-        "vn", F.sqrt(dot_unrolled("v", "v", 64))
+        "vn", vnorm("v")
     )
     bench = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -1445,9 +1419,7 @@ def semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = corpus.crossJoin(F.broadcast(bench)).select(
         "q_id",
         "vec_id",
-        F.round(
-            dot_unrolled("q", "v", 64) / (F.col("qn") * F.col("vn")), 6
-        ).alias("cos"),
+        cos6("q", "qn", "v", "vn").alias("cos"),
     )
     return (
         scored.groupBy("q_id")
@@ -1865,13 +1837,14 @@ def exact_cosine_pairs(
     preserved by construction: the GEMM is a prefilter whose band
     covers any summation-order divergence from the JVM fold (~1e-14
     for unit-norm 64-dim vectors, band 1e-6), and every survivor is
-    re-verified on the JVM with the ORIGINAL codegen'd expression
-    (round(cosine, 6) ≥ τ), so emitted pairs and their ``cos``
-    values are bit-identical to the scalar path and the all-pairs
-    oracle. Why GEMM: the candidate stream is the hot path — dense
-    64-dim dot products are BLAS's home turf (one matrix product
-    per block vs millions of codegen'd scalar folds on the sf0.1
-    blocked all-pairs worst case) — exactly the "vectorized Python
+    re-verified on the JVM with ``cos6`` over the norms checkpointed
+    with the assignment (round(cosine, 6) ≥ τ, same fold and operand
+    order), so emitted pairs and their ``cos`` values are
+    bit-identical to the scalar path and the all-pairs oracle. Why
+    GEMM: the candidate stream is the hot path — dense 64-dim dot
+    products are BLAS's home turf (one matrix product per block vs
+    millions of codegen'd scalar folds on the sf0.1 blocked
+    all-pairs worst case) — exactly the "vectorized Python
     where built-ins can't express it efficiently" rule.
 
     At 100 TB: centroids/radii are ingest-time artifacts; block
@@ -2014,22 +1987,20 @@ def exact_cosine_pairs(
         .applyInPandas(_gemm_block, "v1 long, v2 long")
         .localCheckpoint()
     )
-    # exact re-verify of the (near-dup-sized) survivor band with the
-    # ORIGINAL JVM expression: pair frame broadcasts, corpus streams.
-    # Both probes read the assignment CHECKPOINT (same vec_id/v
-    # values, materialized) instead of re-scanning the source —
-    # round 12: two parquet scans → two checkpoint reads.
-    e1 = assigned.select(F.col("vec_id").alias("v1"), F.col("v").alias("va"))
-    e2 = assigned.select(F.col("vec_id").alias("v2"), F.col("v").alias("vb"))
+    # exact re-verify of the (near-dup-sized) survivor band with
+    # ``cos6``: pair frame broadcasts, corpus streams. Both probes
+    # read the assignment CHECKPOINT — vec_id, v and the ‖v‖ it
+    # already folded — so only the pair dot is computed per pair.
+    e1 = assigned.select(
+        F.col("vec_id").alias("v1"), F.col("v").alias("va"), F.col("vn").alias("an")
+    )
+    e2 = assigned.select(
+        F.col("vec_id").alias("v2"), F.col("v").alias("vb"), F.col("vn").alias("bn")
+    )
     with_a = e1.join(F.broadcast(cand_pairs), "v1")
     return (
         e2.join(F.broadcast(with_a), "v2")
-        .select(
-            "v1",
-            "v2",
-            # unrolled: same IEEE result as the fold, but codegen'd
-            F.round(cosine_unrolled("va", "vb", dim), 6).alias("cos"),
-        )
+        .select("v1", "v2", cos6("va", "an", "vb", "bn", dim).alias("cos"))
         .filter(F.col("cos") >= tau)
     )
 
@@ -2143,7 +2114,7 @@ def knn_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The unordered kNN edge frame ``knn_graph`` and
     ``mutual_knn_pairs`` share — (vec_id, neighbor_id, cos, rank)."""
     emb = _doubles(load_table(spark, sf_dir, "embeddings")).withColumn(
-        "vn", F.sqrt(dot_unrolled("v", "v", 64))
+        "vn", vnorm("v")
     )
     right = emb.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -2156,9 +2127,7 @@ def knn_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "neighbor_id",
-            F.round(
-                dot_unrolled("v", "nv", 64) / (F.col("vn") * F.col("nn")), 6
-            ).alias("cos"),
+            cos6("v", "vn", "nv", "nn").alias("cos"),
         )
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -2376,7 +2345,7 @@ def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap the micro grid down or the sum to DECIMAL there; exact at
     any tested SF.)"""
     emb = _doubles(load_table(spark, sf_dir, "embeddings"))
-    vn = F.sqrt(dot_unrolled("v", "v", 64))
+    vn = vnorm("v")
     q = F.transform(
         F.col("v"), lambda x: F.round(x / vn * 1e6, 0).cast("long")
     )
@@ -3020,13 +2989,15 @@ def embedding_collapse_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline. Same dot/cosine operand order as ann_brute_force, so
     the oracle's ``list_inner_product`` loop matches bit-for-bit."""
     emb = _doubles(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", "v"
+        "vec_id", "v", vnorm("v").alias("vn")
     )
     nxt = emb.select(
-        (F.col("vec_id") - 1).alias("vec_id"), F.col("v").alias("w")
+        (F.col("vec_id") - 1).alias("vec_id"),
+        F.col("v").alias("w"),
+        F.col("vn").alias("wn"),
     )
     pairs = emb.join(nxt, "vec_id").select(
-        F.round(cosine_unrolled("v", "w", 64), 6).alias("cos")
+        cos6("v", "vn", "w", "wn").alias("cos")
     )
     binned = pairs.select(
         "cos",
@@ -3109,7 +3080,7 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's loop matches bit-for-bit), integer-e3 quantized for
     binning and integer-e6 summed for the exact mean."""
     emb = _doubles(load_table(spark, sf_dir, "embeddings"))
-    norm = F.sqrt(dot_unrolled("v", "v", 64))
+    norm = vnorm("v")
     rows = emb.select(
         F.round(norm * 1e3, 0).cast("long").alias("n_e3"),
         F.round(norm * 1e6, 0).cast("long").alias("n_e6"),
@@ -3567,7 +3538,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded-at-6 cosines, so the whole greedy trajectory — not just
     the final set — is hash-checked against DuckDB."""
     emb = _doubles(load_table(spark, sf_dir, "embeddings")).withColumn(
-        "vn", F.sqrt(dot_unrolled("v", "v", 64))
+        "vn", vnorm("v")
     )
     q = emb.filter(F.col("vec_id") == MMR_QUERY_ID).select(
         F.col("v").alias("q"), F.col("vn").alias("qn")
@@ -3579,9 +3550,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "v",
             "vn",
-            F.round(dot_unrolled("q", "v", 64) / (F.col("qn") * F.col("vn")), 6).alias(
-                "rel"
-            ),
+            cos6("q", "qn", "v", "vn").alias("rel"),
         )
         .orderBy(F.desc("rel"), F.asc("vec_id"))
         .limit(MMR_POOL)
@@ -3602,13 +3571,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round's penalty lookup is one equi-join on the candidate id
     pairs = (
         a.join(b, F.col("a") != F.col("b"))
-        .select(
-            "a",
-            "b",
-            F.round(
-                dot_unrolled("av", "bv", 64) / (F.col("an") * F.col("bn")), 6
-            ).alias("pcos"),
-        )
+        .select("a", "b", cos6("av", "an", "bv", "bn").alias("pcos"))
     )
     slim = cand.select("vec_id", "rel")
     lam, mu = F.lit(MMR_LAMBDA), F.lit(MMR_MU)
@@ -4121,7 +4084,7 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     a ≤|labels|-row rollup. Cosines are exact doubles from the same
     expression tree on both engines."""
     emb = _doubles(load_table(spark, sf_dir, "embeddings")).withColumn(
-        "vn", F.sqrt(dot_unrolled("v", "v", 64))
+        "vn", vnorm("v")
     )
     queries = emb.filter(
         F.pmod("vec_id", F.lit(KNN_EVAL_QUERY_MOD)) == 0
@@ -4138,9 +4101,7 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "true_label",
             "label",
-            F.round(
-                dot_unrolled("q", "v", 64) / (F.col("qn") * F.col("vn")), 6
-            ).alias("cos"),
+            cos6("q", "qn", "v", "vn").alias("cos"),
             "vec_id",
         )
     )

@@ -424,6 +424,28 @@ def test_exact_cosine_pairs_zero_norm_centroid(spark):
     assert len(want) > 200  # pairs inside the zero centroid's cell
 
 
+def test_exact_cosine_pairs_compiles_without_codegen_fallback(spark, sf_small):
+    """The re-verify join must fit whole-stage codegen's 64 KB method
+    limit: the filter on ``cos`` is pushed into the broadcast join
+    condition, and a pair cosine that re-folds both norms per pair
+    (3·64 terms) outgrew it — Spark logged ``ERROR CodeGenerator`` and
+    fell back to the interpreter. With the fallback disabled, such a
+    plan raises instead of running."""
+    from cricket_analytics_nosql_spark.operators.similarity import (
+        COS_TAU,
+        _doubles,
+        exact_cosine_pairs,
+    )
+
+    emb = _doubles(load_table(spark, sf_small, "embeddings"))
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        assert exact_cosine_pairs(emb, tau=COS_TAU).count() == 27
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
+
+
 def test_chunking_reconstructs_documents(spark):
     """Overlapping chunks lose no characters: stitching each chunk's
     first `stride` chars (full last chunk) reproduces the document.

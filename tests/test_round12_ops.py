@@ -75,7 +75,7 @@ def test_assign_with_radii_matches_assign_cells_and_direct(spark, sf_small):
                             F.lit(1.0),
                             F.greatest(
                                 F.lit(-1.0),
-                                S.cosine_unrolled("v", "centroid", 64),
+                                S.cosine(F.col("v"), F.col("centroid")),
                             ),
                         )
                     ).alias("th"),

@@ -131,15 +131,20 @@ def test_bm25_maxscore_is_admissible_and_prunes(spark, sf_small):
 
 
 def test_unrolled_expr_fast_path_is_bit_identical(spark):
-    """The F.expr string fast path for dot/cosine_unrolled must
-    produce the SAME doubles as the Column-built form — same element
-    order, same fold, same IEEE result — on adversarial values
-    (subnormals, huge/tiny magnitude mixes, negatives)."""
+    """The unrolled fixed-dim kernel must produce the SAME doubles as
+    the generic ``dot``/``cosine`` folds — same element order, same
+    fold, same IEEE result — on adversarial values (subnormals,
+    huge/tiny magnitude mixes, negatives): ``dot_unrolled`` against
+    ``dot``, and ``cos6`` over ``vnorm`` columns against
+    ``round(cosine, 6)``."""
     import random
 
     from cricket_analytics_nosql_spark.operators.similarity import (
-        cosine_unrolled,
+        cos6,
+        cosine,
+        dot,
         dot_unrolled,
+        vnorm,
     )
 
     rng = random.Random(8)
@@ -152,15 +157,20 @@ def test_unrolled_expr_fast_path_is_bit_identical(spark):
         for _ in range(50)
     ]
     df = spark.createDataFrame(rows, "a array<double>, b array<double>")
-    got = df.select(
-        dot_unrolled("a", "b", dim).alias("d_s"),
-        dot_unrolled(F.col("a"), F.col("b"), dim).alias("d_c"),
-        cosine_unrolled("a", "b", dim).alias("c_s"),
-        cosine_unrolled(F.col("a"), F.col("b"), dim).alias("c_c"),
-    ).collect()
+    got = (
+        df.withColumn("an", vnorm("a", dim))
+        .withColumn("bn", vnorm("b", dim))
+        .select(
+            dot_unrolled("a", "b", dim).alias("d_u"),
+            dot(F.col("a"), F.col("b")).alias("d_f"),
+            cos6("a", "an", "b", "bn", dim).alias("c_u"),
+            F.round(cosine(F.col("a"), F.col("b")), 6).alias("c_f"),
+        )
+        .collect()
+    )
     for r in got:
-        assert r.d_s == r.d_c  # exact equality, not approx
-        assert r.c_s == r.c_c
+        assert r.d_u == r.d_f  # exact equality, not approx
+        assert r.c_u == r.c_f
 
 
 def test_mutual_knn_is_symmetric_subset(spark, sf_small):
