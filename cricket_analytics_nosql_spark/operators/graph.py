@@ -6,14 +6,16 @@ The reference projects deliveries into a Neo4j property graph
 DataFrames — ``vertices(id, ...)`` and ``edges(src, dst, ...)`` —
 and every Cypher query shape is a join/aggregation on them.
 
-PageRank (G2) is the one algorithm with real iterative content:
-each iteration is one join + one groupBy (one shuffle), with
-``localCheckpoint`` every few iterations to truncate lineage —
-without it the plan tree doubles per iteration and the driver
-OOMs long before 100 TB is the problem. Only O(1) scalars ever
-reach the driver (the dangling-mass total — computed inside the
-contrib shuffle via rollup, fetched as one row — and an optional
-convergence delta); ranks themselves stay distributed.
+PageRank (G2) is the one algorithm with real iterative content.
+One power loop (``pagerank``) serves global and personalized
+PageRank alike: each round materializes one power vector with one
+fixed-shape job (links ⋈ w → partial/final sum) and a
+``localCheckpoint`` that truncates lineage — without it the plan
+tree doubles per iteration and the driver OOMs long before 100 TB is
+the problem. Only O(1) scalars reach the driver per round (the
+power vector's mass and row count, observed on the round's own job);
+dangling mass and convergence are driver-side arithmetic over them,
+and ranks themselves stay distributed.
 
 Generic testdata binding: the customer↔supplier trade graph
 (who bought from whom, via lineitem×orders). For PageRank the
@@ -125,48 +127,62 @@ def pagerank(
     check_every: int = 4,
     broadcast_max_vertices: int = 1_000_000,
     weight_col: str | None = None,
+    seed_id: int | str | None = None,
 ) -> DataFrame:
-    """Standard-formulation PageRank over an ``edges(src, dst)``
-    DataFrame — WEIGHTED when ``weight_col`` names a positive edge
-    column (gds.pageRank's relationshipWeightProperty): mass leaves
-    each vertex proportionally to edge weight, w/Σw(src), instead of
+    """PageRank over an ``edges(src, dst)`` DataFrame, global or
+    personalized, returning ``(id, pagerank)``.
+
+    - Global (``seed_id=None``): the walk restarts uniformly, r = 1.
+      Every vertex gets a row and the scores sum to the vertex count
+      (the gds.pageRank normalization).
+    - Personalized (``seed_id=s``, the gds.pageRank ``sourceNodes``
+      variant): the walk restarts at the one seed, r = e_s, and
+      dangling mass teleports back to it. Only vertices the walk
+      reaches get a row and the scores sum to 1.
+
+    WEIGHTED when ``weight_col`` names a positive edge column
+    (gds.pageRank's relationshipWeightProperty): mass leaves each
+    vertex proportionally to edge weight, w/Σw(src), instead of
     uniformly 1/out_deg. Either way the per-edge transition ratio is
     PRECOMPUTED into the checkpointed link table, so the iteration
-    multiplies instead of divides and the Krylov loop below is
-    identical for both modes (row-stochastic either way — the
-    dangling-mass arithmetic needs no change).
-    Returns ``(id, pagerank)`` with scores summing to the
-    vertex count (the gds.pageRank normalization).
+    multiplies instead of divides and the loop below is identical for
+    both modes (row-stochastic either way — the dangling-mass
+    arithmetic needs no change).
 
     The power iteration is linear, and that linearity is the whole
-    performance design. With A(x)(dst) = Σ_{src→dst} x(src)/out_deg(src)
-    and rank(v) = base + d·contrib(v):
+    performance design. With A(x)(dst) = Σ_{src→dst} x(src)·p(src→dst)
+    and rank_k = base_k·r + d·contrib_k:
 
       contrib_{k+1} = A(rank_k) = base_k·w_1 + d·Σ_j a_{k,j}·w_{j+1}
 
-    where w_1 = A(1) and w_{j+1} = A(w_j) are iteration-invariant
+    where w_1 = A(r) and w_{j+1} = A(w_j) are iteration-invariant
     "power vectors" of the graph, and the coefficients a_{k,j} plus
     the dangling-mass scalars are plain Python floats the driver
-    tracks. So each iteration materializes exactly ONE new vertex-
-    sized frame w_{k+1} via ONE fixed-shape job — links ⋈ w_k →
-    project → partial/final sum — whose generated code never changes
-    (no per-iteration literals → whole-stage-codegen cache hits
-    every round; with the dangling-mass scalar baked in as a literal,
-    each round recompiled its stage — measured ~0.3 s/iteration at
-    sf0.1, the dominant loop cost). Σw_{k+1} is measured by an
-    ``Observation`` on the pre-agg rows of the same job, so only O(1)
-    bytes reach the driver per round.
+    tracks. So each iteration materializes exactly ONE new frame
+    w_{k+1} via ONE fixed-shape job — links ⋈ w_k → project →
+    partial/final sum — whose generated code never changes (no
+    per-iteration literals → whole-stage-codegen cache hits every
+    round; with the dangling-mass scalar baked in as a literal, each
+    round recompiled its stage — measured ~0.3 s/iteration at sf0.1,
+    the dominant loop cost). Σw_{k+1} is measured by an
+    ``Observation`` on the pre-agg rows of the same job and its row
+    count by a second one on the agg output, so only O(1) bytes reach
+    the driver per round. A personalized w_j holds only the vertices
+    j hops from the seed, so its frames are reach-bounded, not
+    vertex-bounded — what makes per-seed PPR tractable at 100 TB.
 
-    Dangling mass needs no pass of its own: mass is conserved at N,
-    so dm_k = N − Σ_v contrib_k(v) = N − Σ_j a_{k,j}·S_j with
-    S_j = Σw_j — driver-side arithmetic. base_k = (1−d) + d·dm_k/N.
-    The final ranks are one linear-combination job
-    (union of a_j-scaled w_j frames → sum per vertex) plus one join
-    against the vertex universe.
+    Dangling mass needs no pass of its own: the mass M = Σr (the
+    vertex count n globally, 1 personalized) is conserved, so
+    dm_k = M − Σ_v contrib_k(v) = M − Σ_j a_{k,j}·S_j with S_j = Σw_j
+    — driver-side arithmetic, and base_k = (1−d) + d·dm_k/M. The
+    final ranks are one linear-combination job (union of a_j-scaled
+    w_j frames → sum per vertex), then globally one join against the
+    vertex universe, personalized one ``(seed, base)`` row unioned
+    into d·contrib and summed per id.
 
     Convergence (``tol``): |contrib_{k+1} − contrib_k|₁ ≤
     Σ_j |Δa_j|·S_j (all w_j ≥ 0) — a free driver-side bound, checked
-    every ``check_every`` rounds; no probe jobs at all.
+    every ``check_every`` rounds against ``tol·M``; no probe jobs.
 
     The loop runs under ``session.fixed_plan`` (AQE off, shuffle
     partitions = ``loop_partitions(m)``): under AQE Spark 4.1 reports
@@ -175,18 +191,17 @@ def pagerank(
     re-shuffle it (measured cost in ``fixed_plan``'s docstring).
 
     Lineage discipline (SURVEY §7.8 risk 1): every w_j is
-    ``localCheckpoint``-ed — each is small (one row per in-linked
-    vertex) and downstream consumers read materialized data. The big
-    edge list is materialized once; below
-    ``broadcast_max_vertices`` the w frames broadcast into the join
-    so the edge list never shuffles, above it the edge list is
-    pre-partitioned on the join key once so each round's shuffle is
-    vertex-sized (co-partitioned, AQE off, fixed partition count →
-    no exchange beyond the agg itself).
+    ``localCheckpoint``-ed, and the big edge list is materialized
+    once, partitioned by dst. While the last w frame's measured row
+    count is ≤ ``broadcast_max_vertices`` it broadcasts into the join,
+    so the edge list never shuffles; once a frame exceeds it, the
+    link table is re-keyed on the join key once and each later round
+    shuffles only vertex-sized frames (co-partitioned, AQE off, fixed
+    partition count → no exchange beyond the agg itself).
     """
     spark = edges.sparkSession
     # Materialize the edge list ONCE before anything else: it feeds
-    # three consumers (vertex universe, out-degrees, link table) and
+    # several consumers (out-degrees, link table, weight check) and
     # is typically the output of an expensive upstream join — left
     # lazy, that upstream would re-execute once per consumer. This
     # runs under the session's normal AQE config: the upstream build
@@ -195,7 +210,7 @@ def pagerank(
     e_obs = Observation()
     edges = edges.observe(e_obs, F.count(F.lit(1)).alias("m")).localCheckpoint()
     m = int(e_obs.get["m"])
-    if m == 0:
+    if m == 0 and seed_id is None:
         return spark.createDataFrame([], "id long, pagerank double")
 
     # One knob sizes BOTH sides of the per-round job: the link scan's
@@ -214,8 +229,9 @@ def pagerank(
             # fail fast on the positive-weight precondition (gds
             # rejects non-positive relationship weights too): a src
             # whose weights sum to 0/NULL would get p = NULL and its
-            # mass silently dropped as phantom dangling mass. One
-            # bounded probe over the already-checkpointed edges —
+            # mass silently dropped as phantom dangling mass, and a
+            # negative weight would make p negative. One bounded
+            # probe over the already-checkpointed edges —
             # short-circuits at the first offending row.
             bad = (
                 edges.filter(
@@ -233,20 +249,9 @@ def pagerank(
                 F.sum(F.col(weight_col).cast("double")).alias("w_out")
             )
             edge_w = F.col(weight_col).cast("double")
-        # The broadcast decision compares the MEASURED VERTEX COUNT
-        # to the bound — the frames actually broadcast per round are
-        # vertex-sized, and the earlier edge-count proxy (m as an
-        # upper bound on 2m vertex rows) mis-classified every dense
-        # graph: the sf0.1 trade graph has 1.17M edges but only 16k
-        # vertices, and the proxy pushed it into the co-partitioned
-        # path, re-sorting the 1.1M-row link table against a 16k-row
-        # frame every round. Local wall is within noise either way
-        # (the loop is task-launch-bound at sf0.1 — ~0.23 s/round on
-        # both paths), but at cluster scale sorting the full edge
-        # list per round is the real bug the proxy hid (PERF.md,
-        # Iterative graph). out_mass materializes first (src-count
-        # observed on the same job) so its own join side can be
-        # decided before the link build; it is src-sized ≤ n.
+        # out_mass materializes first (src-count observed on the same
+        # job) so its own join side can be decided before the link
+        # build; it is src-sized ≤ n.
         om_obs = Observation()
         out_mass = (
             out_mass.observe(om_obs, F.count(F.lit(1)).alias("n_src"))
@@ -263,73 +268,86 @@ def pagerank(
         )
         # Partition the checkpointed link table BY dst (round 11):
         # localCheckpoint preserves hashpartitioning on the
-        # ExistingRDD scan, so every loop round's groupBy("dst")
+        # ExistingRDD scan, so every broadcast round's groupBy("dst")
         # final-aggregates in place — the per-round job becomes a
         # single stage (broadcast join + agg), no shuffle at all
         # (plan: 2 Exchange → 1, the one left being the w broadcast;
         # measured 0.18 → 0.14 s/round at sf0.1 on local[32]).
         # A keyed repartition also skips round-robin's local
         # sort-before-repartition pass (SPARK-23207). Skew bound for
-        # this path: it only serves graphs whose vertex count n ≤
-        # broadcast_max_vertices, and a key's rows ≤ its in-degree
-        # < n, so one hot dst costs at most ~n/150k task-widths of
-        # imbalance — bounded, unlike open-ended key skew. If the
-        # vertex count turns out too big to broadcast, the link
-        # table is re-partitioned ONCE on the join key below (one
-        # extra edge shuffle, amortized over every round).
+        # this path: it only serves rounds whose w frame has ≤
+        # broadcast_max_vertices rows, and a key's rows ≤ its
+        # in-degree < n, so one hot dst costs at most ~n/150k
+        # task-widths of imbalance — bounded, unlike open-ended key
+        # skew.
         links = links.repartition(loop_parts, F.col("dst")).localCheckpoint()
+        keyed: DataFrame | None = None  # links by id, built on demand
 
-        # w_1 = A(1): no join — Σ p over in-edges.
-        obs1 = Observation()
+        # w_1 = A(r), no join: Σ p over the in-edges of every vertex
+        # (r = 1), or over the seed's own out-links (r = e_seed).
+        start = links if seed_id is None else links.filter(
+            F.col("id") == F.lit(seed_id)
+        )
+        obs1, rows1 = Observation(), Observation()
         w1 = (
-            links.select("dst", F.col("p").alias("c"))
+            start.select("dst", F.col("p").alias("c"))
             .observe(obs1, F.sum("c").alias("s"))
             .groupBy("dst")
             .agg(F.sum("c").alias("x"))
+            .observe(rows1, F.count(F.lit(1)).alias("n"))
             .localCheckpoint()
         )
         ws = [w1]
         sums = [float(obs1.get["s"] or 0.0)]
+        w_rows = int(rows1.get["n"])
         coef = [1.0]  # contrib_1 = w_1
         # A annihilates a power vector (Σw_j = 0 with w ≥ 0 ⇒ w_j is
         # identically zero ⇒ every later w is zero too: A is linear
         # and positivity-preserving). From that point the remaining
         # rounds are pure coefficient arithmetic — no more jobs. Not
         # a corner case: any DAG reaches it at depth ≤ diameter, and
-        # the bipartite trade graph reaches it at j = 2, which turns
-        # 11 of this bench query's 12 rounds into driver-side floats.
+        # a one-directional trade graph reaches it at j = 2.
         exhausted = sums[0] == 0.0
 
-        # Vertex universe = src ∪ dst — but srcs are links' join keys
-        # and every in-linked dst is already a w_1 row, so the union
-        # reads one checkpointed edge pass plus a vertex-sized frame
-        # instead of re-scanning the edge list twice (halves the
-        # distinct's input).
-        n_obs = Observation()
-        vertices = (
-            links.select("id")
-            .union(w1.select(F.col("dst").alias("id")))
-            .distinct()
-            .observe(n_obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
-        )
-        n = int(n_obs.get["n"])
-        small = n <= broadcast_max_vertices
-        maybe_bcast = F.broadcast if small else (lambda df: df)
-        if not small:
-            links = links.repartition(
-                loop_parts, F.col("id")
-            ).localCheckpoint()
+        if seed_id is None:
+            # Vertex universe = src ∪ dst — but srcs are links' join
+            # keys and every in-linked dst is already a w_1 row, so
+            # the union reads one checkpointed edge pass plus a
+            # vertex-sized frame instead of re-scanning the edge list
+            # twice (halves the distinct's input).
+            n_obs = Observation()
+            vertices = (
+                links.select("id")
+                .union(w1.select(F.col("dst").alias("id")))
+                .distinct()
+                .observe(n_obs, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint()
+            )
+            n = int(n_obs.get["n"])
+            mass = float(n)
+        else:
+            mass = 1.0
 
         for i in range(1, max_iter):
-            dm = float(n) - sum(a * s for a, s in zip(coef, sums))
-            base = (1.0 - d) + d * dm / float(n)
+            dm = mass - sum(a * s for a, s in zip(coef, sums))
+            base = (1.0 - d) + d * dm / mass
             if not exhausted:
-                obs = Observation()
-                w_next = _pagerank_round(
-                    links, ws[-1], obs, small
-                ).localCheckpoint()
+                small = w_rows <= broadcast_max_vertices
+                if not small and keyed is None:
+                    # one extra edge shuffle, amortized over every
+                    # remaining round
+                    keyed = links.repartition(
+                        loop_parts, F.col("id")
+                    ).localCheckpoint()
+                obs, rows = Observation(), Observation()
+                round_links = links if small else keyed
+                w_next = (
+                    _pagerank_round(round_links, ws[-1], obs, small)
+                    .observe(rows, F.count(F.lit(1)).alias("n"))
+                    .localCheckpoint()
+                )
                 s_next = float(obs.get["s"] or 0.0)
+                w_rows = int(rows.get["n"])
                 if s_next == 0.0:
                     exhausted = True  # zero frame: drop it, and all later
                 else:
@@ -344,13 +362,13 @@ def pagerank(
                     abs(a - b) * s for a, b, s in zip(new_coef, padded, sums)
                 )
                 coef = new_coef
-                if bound < tol * n:
+                if bound < tol * mass:
                     break
             else:
                 coef = new_coef
 
-    dm = float(n) - sum(a * s for a, s in zip(coef, sums))
-    base = (1.0 - d) + d * dm / float(n)
+    dm = mass - sum(a * s for a, s in zip(coef, sums))
+    base = (1.0 - d) + d * dm / mass
     # contrib_K = Σ_j coef_j · w_j — one union+sum job, vertex-sized.
     scaled = [
         w.select("dst", (F.col("x") * F.lit(a)).alias("c"))
@@ -360,7 +378,21 @@ def pagerank(
     for part in scaled[1:]:
         combined = combined.unionByName(part)
     contribs = combined.groupBy("dst").agg(F.sum("c").alias("contrib"))
+    if seed_id is not None:
+        # the restart share lands on the seed alone
+        restart = spark.range(1).select(
+            F.lit(seed_id).alias("dst"), F.lit(base).alias("c")
+        )
+        return (
+            contribs.select("dst", (F.lit(d) * F.col("contrib")).alias("c"))
+            .unionByName(restart)
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum("c").alias("pagerank"))
+        )
     # vertex universe joined ONCE, at the end
+    maybe_bcast = (
+        F.broadcast if n <= broadcast_max_vertices else (lambda df: df)
+    )
     return (
         vertices.join(
             maybe_bcast(contribs.withColumnRenamed("dst", "cdst")),
@@ -384,7 +416,7 @@ def _pagerank_round(
     x(src)·p(src→dst) over in-edges (p is the precomputed transition
     ratio: 1/out_deg unweighted, w/Σw(src) weighted). Σw is observed
     into ``obs`` on the pre-agg rows of the same job. ``broadcast``
-    picks the small-graph plan (x broadcast into the dst-keyed link
+    picks the small-frame plan (x broadcast into the dst-keyed link
     table) over the co-partitioned one (links keyed by id)."""
     xs = x.withColumnRenamed("dst", "id")
     return (
@@ -444,18 +476,7 @@ def pagerank_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the check itself is free scalar arithmetic, but it would never
     fire)."""
     edges = trade_graph_edges(spark, sf_dir)
-    pr = pagerank(edges, max_iter=12, tol=None)
-    return (
-        pr.select(
-            F.when(F.col("id") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("entity"),
-            F.shiftright("id", 1).alias("key"),
-            F.round("pagerank", 6).alias("pagerank"),
-        )
-        .orderBy(F.desc("pagerank"), F.asc("entity"), F.asc("key"))
-        .limit(20)
-    )
+    return _top_ranks(pagerank(edges, max_iter=12, tol=None))
 
 
 def pagerank_top_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -467,7 +488,13 @@ def pagerank_top_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel is additionally pinned against a Python power iteration
     in tests/test_graph.py."""
     edges = trade_graph_edges(spark, sf_dir)
-    pr = pagerank(edges, max_iter=12, tol=None, weight_col="weight")
+    return _top_ranks(
+        pagerank(edges, max_iter=12, tol=None, weight_col="weight")
+    )
+
+
+def _top_ranks(pr: DataFrame) -> DataFrame:
+    """Top-20 trade-graph ranks decoded back to (entity, key)."""
     return (
         pr.select(
             F.when(F.col("id") % 2 == 0, F.lit("customer"))
@@ -578,113 +605,6 @@ PPR_ROUNDS = 8
 PPR_DAMPING = 0.85
 
 
-def personalized_pagerank(
-    edges: DataFrame,
-    seed_id: int,
-    damping: float = PPR_DAMPING,
-    rounds: int = PPR_ROUNDS,
-    weight_col: str | None = None,
-    broadcast_max_vertices: int = 1_000_000,
-    _strategy_trace: list[str] | None = None,
-) -> DataFrame:
-    """Personalized PageRank: a random walk that restarts at ONE
-    seed vertex — the similar-entity/recommendation scorer (the
-    gds.pageRank ``sourceNodes`` variant). rank_0 = e_seed;
-    rank_{k+1} = (1−d + d·dm_k)·e_seed + d·A(rank_k), with dangling
-    mass dm_k teleporting back to the seed; Σrank = 1 throughout.
-
-    Unlike global PageRank, rank frames start SPARSE (one row) and
-    grow with the seed's reach, so per-round frames are
-    reach-bounded, not vertex-bounded — the property that makes PPR
-    tractable per-seed at 100 TB. Per round: ONE job (links ⋈ rank →
-    project → partial/final sum), identical plan every round — the
-    per-round teleport scalar rides in as a 1-ROW DATAFRAME unioned
-    into the aggregation (data, not a literal), so whole-stage
-    codegen caches across rounds (the pagerank discipline). Σcontrib
-    is observed on the same job; the teleport base is driver float
-    arithmetic. Returns (id, ppr), nonzero rows only.
-
-    The rank side of the per-round join is broadcast only while its
-    MEASURED row count (observed for free on the previous round's
-    rank-build job) stays ≤ ``broadcast_max_vertices`` — the same
-    measured gate as global ``pagerank``. Reach-bounded is an
-    argument about growth, not a bound: on a hub-rich graph the
-    reach after 8 rounds is effectively the vertex set, and an
-    unconditional broadcast would ship a vertex-sized frame to every
-    executor per round. Above the gate, the link table is
-    re-partitioned ONCE on the join key (amortized over remaining
-    rounds) and rank shuffles co-partitioned — vertex-sized, never
-    edge-sized. ``_strategy_trace`` (tests) records the per-round
-    decision."""
-    spark = edges.sparkSession
-    if weight_col is None:
-        out_mass = edges.groupBy("src").agg(
-            F.count(F.lit(1)).cast("double").alias("w_out")
-        )
-        edge_w = F.lit(1.0)
-    else:
-        # same positive-weight contract as ``pagerank``: transition
-        # ratios are w/Σw(src), exact because trade weights are
-        # integer-valued doubles (order-exact sums)
-        out_mass = edges.groupBy("src").agg(
-            F.sum(F.col(weight_col).cast("double")).alias("w_out")
-        )
-        edge_w = F.col(weight_col).cast("double")
-    links = (
-        edges.join(F.broadcast(out_mass), "src")
-        .select(
-            F.col("src").alias("id"),
-            "dst",
-            (edge_w / F.col("w_out")).alias("p"),
-        )
-        .localCheckpoint()
-    )
-    links_parted: DataFrame | None = None  # built on first fallback
-    d = float(damping)
-    rank = spark.createDataFrame([(seed_id, 1.0)], "id long, x double")
-    rank = rank.localCheckpoint()
-    rank_rows = 1
-    for _ in range(rounds):
-        small = rank_rows <= broadcast_max_vertices
-        if _strategy_trace is not None:
-            _strategy_trace.append("broadcast" if small else "copartition")
-        if small:
-            join_links, join_rank = links, F.broadcast(rank)
-        else:
-            if links_parted is None:
-                links_parted = links.repartition(F.col("id")).localCheckpoint()
-            join_links, join_rank = links_parted, rank
-        obs = Observation()
-        contrib = (
-            join_links.join(join_rank, "id")
-            .select(
-                F.col("dst").alias("id"), (F.col("x") * F.col("p")).alias("c")
-            )
-            .observe(obs, F.sum("c").alias("s"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("c"))
-            .localCheckpoint()
-        )
-        s = float(obs.get["s"] or 0.0)
-        # dm = walk mass that fell off dangling vertices; it restarts
-        # at the seed together with the 1−d teleport share
-        base = (1.0 - d) + d * (1.0 - s)
-        teleport = spark.createDataFrame(
-            [(int(seed_id), base)], "id long, c double"
-        )
-        robs = Observation()
-        rank = (
-            contrib.select("id", (F.lit(d) * F.col("c")).alias("c"))
-            .unionByName(teleport)
-            .groupBy("id")
-            .agg(F.sum("c").alias("x"))
-            .observe(robs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
-        )
-        rank_rows = int(robs.get["n"] or 0)
-    return rank.select("id", F.col("x").alias("ppr"))
-
-
 def ppr_supplier_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recommendation readout: suppliers most relevant to customer
     ``PPR_SEED_CUSTOMER`` by personalized PageRank over the
@@ -692,17 +612,7 @@ def ppr_supplier_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers who buy from MY suppliers score too), not just direct
     edge weight. Top-15, scores rounded; hash-oracled by the same
     unrolled-CTE technique as global PageRank."""
-    edges = trade_graph_edges(spark, sf_dir)
-    pr = personalized_pagerank(edges, seed_id=2 * PPR_SEED_CUSTOMER)
-    return (
-        pr.filter(F.col("id") % 2 == 1)
-        .select(
-            F.shiftright("id", 1).alias("supplier_key"),
-            (F.round("ppr", 9) + F.lit(0.0)).alias("ppr"),
-        )
-        .orderBy(F.desc("ppr"), F.asc("supplier_key"))
-        .limit(15)
-    )
+    return _top_suppliers(_ppr(trade_graph_edges(spark, sf_dir)), 15)
 
 
 def ppr_supplier_recs_weighted(
@@ -715,17 +625,40 @@ def ppr_supplier_recs_weighted(
     mass. Same 8-round budget, same unrolled-CTE oracle with
     weighted transition ratios."""
     edges = trade_graph_edges(spark, sf_dir)
-    pr = personalized_pagerank(
-        edges, seed_id=2 * PPR_SEED_CUSTOMER, weight_col="weight"
+    return _top_suppliers(_ppr(edges, weight_col="weight"), 15)
+
+
+def _ppr(
+    edges: DataFrame, d: float = PPR_DAMPING, weight_col: str | None = None
+) -> DataFrame:
+    """The catalog's personalized PageRank: seeded at customer
+    ``PPR_SEED_CUSTOMER``, a fixed ``PPR_ROUNDS`` budget, tol off."""
+    return pagerank(
+        edges,
+        damping=d,
+        max_iter=PPR_ROUNDS,
+        tol=None,
+        weight_col=weight_col,
+        seed_id=2 * PPR_SEED_CUSTOMER,
     )
+
+
+def _top_suppliers(
+    pr: DataFrame, limit: int, damping: float | None = None
+) -> DataFrame:
+    """The ``limit`` suppliers with the highest personalized score,
+    rounded at 1e-9 (``+ 0.0`` folds a -0.0), led by a ``damping``
+    literal column when one is given."""
+    lead = [] if damping is None else [F.lit(float(damping)).alias("damping")]
     return (
         pr.filter(F.col("id") % 2 == 1)
         .select(
+            *lead,
             F.shiftright("id", 1).alias("supplier_key"),
-            (F.round("ppr", 9) + F.lit(0.0)).alias("ppr"),
+            (F.round("pagerank", 9) + F.lit(0.0)).alias("ppr"),
         )
         .orderBy(F.desc("ppr"), F.asc("supplier_key"))
-        .limit(15)
+        .limit(limit)
     )
 
 
@@ -733,11 +666,11 @@ def _ppr_oracle_sql(
     rounds: int = PPR_ROUNDS, d: float = PPR_DAMPING, weighted: bool = False
 ) -> str:
     """Unrolled personalized-PageRank recurrence (the
-    ``_pagerank_oracle_sql`` technique with a seed restart vector).
-    DuckDB keeps rank rows sparse exactly like the Spark loop (the
-    teleport row unions into the per-round aggregation), and the
-    scalar association mirrors the driver floats:
-    ``(1-d) + d*(1 - Σcontrib)``. Rounded at 1e-9: PPR mass after 8
+    ``_pagerank_oracle_sql`` technique with a seed restart vector):
+    the direct form of the recurrence ``pagerank`` evaluates in
+    power-vector form. Rank rows stay sparse (the teleport row unions
+    into each round's aggregation), and the scalar association
+    mirrors the driver floats: ``(1-d) + d*(1 - Σcontrib)``. Rounded at 1e-9: PPR mass after 8
     rounds spreads to ~1e-5-scale scores, and cross-engine
     sum-order drift sits ~1e-17 — eight orders below the grid."""
     seed = 2 * PPR_SEED_CUSTOMER
@@ -808,30 +741,14 @@ def ppr_damping_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the evidence for choosing a production damping rather than
     copying 0.85 from the textbook.
 
-    Three sparse seeded walks over one shared edge frame (the
-    measured-broadcast PPR machinery); each oracle branch is the
-    same unrolled-recurrence CTE at its d, unioned."""
+    One seeded ``pagerank`` loop per damping over one shared edge
+    frame; each oracle branch is the same unrolled-recurrence CTE at
+    its d, unioned."""
     edges = trade_graph_edges(spark, sf_dir)
-    outs = []
-    for d in PPR_SWEEP_DAMPINGS:
-        pr = personalized_pagerank(
-            edges, seed_id=2 * PPR_SEED_CUSTOMER, damping=d
-        )
-        outs.append(
-            pr.filter(F.col("id") % 2 == 1)
-            .select(
-                F.lit(float(d)).alias("damping"),
-                F.shiftright("id", 1).alias("supplier_key"),
-                (F.round("ppr", 9) + F.lit(0.0)).alias("ppr"),
-            )
-            .orderBy(F.desc("ppr"), F.asc("supplier_key"))
-            .limit(5)
-        )
+    outs = [_top_suppliers(_ppr(edges, d), 5, d) for d in PPR_SWEEP_DAMPINGS]
     u = outs[0]
     for o in outs[1:]:
         u = u.unionByName(o)
-    from pyspark.sql import Window
-
     w = Window.partitionBy("damping").orderBy(
         F.desc("ppr"), F.asc("supplier_key")
     )

@@ -9,7 +9,11 @@ Pandas-UDF slow path.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import zipfile
 from collections.abc import Iterator
 from contextlib import contextmanager
 
@@ -46,6 +50,7 @@ def get_spark(
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
+    _ship_package(spark)
     return spark
 
 
@@ -73,7 +78,40 @@ def configure_session(spark: SparkSession) -> SparkSession:
             "spark.sql.shuffle.partitions",
             str(spark.sparkContext.defaultParallelism),
         )
+    _ship_package(spark)
     return spark
+
+
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
+_ZIP = "cricket_analytics_nosql_spark.zip"
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Put this package on the Python workers' import path: zip its
+    sources once per SparkContext and ``addPyFile`` the zip.
+
+    Python UDFs, ``applyInPandas`` and stateful-streaming functions
+    defined in the package pickle by module reference, so a worker
+    must import the package to run them. A local worker finds it only
+    when the driver was started from the repo root (the worker
+    inherits that working directory); from anywhere else, or on a
+    cluster, it raises ``ModuleNotFoundError`` without the zip."""
+    sc = spark.sparkContext
+    if _ZIP in sc._python_includes:
+        return
+    out = tempfile.mkdtemp(prefix="cricket-pkg-")
+    atexit.register(shutil.rmtree, out, True)
+    path = os.path.join(out, _ZIP)
+    root = os.path.dirname(_PACKAGE_DIR)
+    # stored, not deflated: ~10x faster to write, for a 1.7 MB zip
+    with zipfile.ZipFile(path, "w") as zf:
+        for d, dirs, files in os.walk(_PACKAGE_DIR):
+            dirs[:] = [x for x in dirs if x != "__pycache__"]
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(d, f)
+                    zf.write(full, os.path.relpath(full, root))
+    sc.addPyFile(path)
 
 
 def loop_partitions(rows: int) -> int:

@@ -65,45 +65,49 @@ def test_pagerank_empty(spark):
     assert pagerank(_edges(spark, [])).count() == 0
 
 
-def test_pagerank_copartitioned_branch_matches_broadcast(spark, sf_small):
-    """The large-graph path (broadcast_max_vertices exceeded → edge
-    list pre-partitioned on the join key, w frames shuffled instead
-    of broadcast) must produce the SAME ranks as the broadcast path —
+@pytest.mark.parametrize("seed_id", [None, 2])
+def test_pagerank_copartitioned_branch_matches_broadcast(
+    spark, sf_small, seed_id
+):
+    """The large-graph path (broadcast_max_vertices exceeded → link
+    table re-keyed on the join key, w frames shuffled instead of
+    broadcast) must produce the SAME ranks as the broadcast path —
     the physical strategy may not change the fixed point. Forced with
     broadcast_max_vertices=0 on the real sf0.001 trade graph (the
-    bidirectional PageRank binding, cycles and all)."""
+    bidirectional PageRank binding, cycles and all), global and
+    seeded."""
     from cricket_analytics_nosql_spark.operators.graph import trade_graph_edges
 
     edges = trade_graph_edges(spark, sf_small)
-    small = {
-        r.id: r.pagerank
-        for r in pagerank(edges, max_iter=8, tol=None).collect()
-    }
-    big = {
-        r.id: r.pagerank
-        for r in pagerank(
-            edges, max_iter=8, tol=None, broadcast_max_vertices=0
-        ).collect()
-    }
+    small, big = (
+        {
+            r.id: r.pagerank
+            for r in pagerank(
+                edges,
+                max_iter=8,
+                tol=None,
+                broadcast_max_vertices=b,
+                seed_id=seed_id,
+            ).collect()
+        }
+        for b in (1_000_000, 0)
+    )
     assert small.keys() == big.keys()
     for k in small:
-        assert small[k] == pytest.approx(big[k], abs=1e-9), k
+        assert small[k] == pytest.approx(big[k], abs=1e-12), k
 
 
-def test_personalized_pagerank_python_reference(spark):
-    """The PPR kernel vs a dense Python power iteration of the same
-    recurrence on a small directed graph with a dangling vertex —
-    pins teleport arithmetic, dangling restart, and sparse-frame
-    bookkeeping against an independent dense implementation."""
-    from cricket_analytics_nosql_spark.operators.graph import (
-        personalized_pagerank,
-    )
-
+def test_seeded_pagerank_python_reference(spark):
+    """Seeded (personalized) PageRank vs a dense Python power
+    iteration of the same recurrence on a small directed graph with a
+    dangling vertex — pins teleport arithmetic, dangling restart, and
+    sparse-frame bookkeeping against an independent dense
+    implementation."""
     pairs = [(0, 1), (1, 2), (2, 0), (1, 3), (3, 4)]  # 4→ nothing
     edges = spark.createDataFrame(pairs, "src long, dst long")
     got = {
-        r.id: r.ppr
-        for r in personalized_pagerank(edges, seed_id=0, rounds=6).collect()
+        r.id: r.pagerank
+        for r in pagerank(edges, max_iter=6, tol=None, seed_id=0).collect()
     }
 
     d, n, seed = 0.85, 5, 0
@@ -126,44 +130,26 @@ def test_personalized_pagerank_python_reference(spark):
     assert max(got, key=got.get) == 0  # restart keeps the seed on top
 
 
-def test_personalized_pagerank_broadcast_gate(spark, sf_small):
-    """The rank-side broadcast is gated on the MEASURED rank row
-    count (VERDICT r5: an unconditional broadcast is a vertex-sized
-    ship-to-every-executor per round once a hub-rich graph's reach
-    saturates). Negative-control pattern: broadcast_max_vertices=0
-    must flip every round to the co-partitioned fallback — proven by
-    the strategy trace — and the fallback must reach the same fixed
-    point bit-for-bit close; the default gate on the same graph
-    stays on the broadcast path (rank rows ≪ 1M at sf0.001)."""
-    from cricket_analytics_nosql_spark.operators.graph import (
-        personalized_pagerank,
-        trade_graph_edges,
-    )
+def test_seeded_pagerank_rounds_cost_what_global_rounds_cost(spark, sf_small):
+    """Global and seeded PageRank share one power loop, so two more
+    rounds cost the same jobs in both modes: on the default gate every
+    round of this graph broadcasts (w rows ≪ 1M at sf0.001), and a
+    broadcast round is two jobs, the w broadcast and the links ⋈ w
+    aggregation."""
+    from cricket_analytics_nosql_spark.operators.graph import trade_graph_edges
 
-    edges = trade_graph_edges(spark, sf_small)
-    trace_b: list[str] = []
-    small = {
-        r.id: r.ppr
-        for r in personalized_pagerank(
-            edges, seed_id=2, rounds=4, _strategy_trace=trace_b
-        ).collect()
-    }
-    assert trace_b == ["broadcast"] * 4
-    trace_c: list[str] = []
-    big = {
-        r.id: r.ppr
-        for r in personalized_pagerank(
-            edges,
-            seed_id=2,
-            rounds=4,
-            broadcast_max_vertices=0,
-            _strategy_trace=trace_c,
-        ).collect()
-    }
-    assert trace_c == ["copartition"] * 4
-    assert small.keys() == big.keys()
-    for k in small:
-        assert small[k] == pytest.approx(big[k], abs=1e-12), k
+    sc = spark.sparkContext
+    edges = trade_graph_edges(spark, sf_small).localCheckpoint()
+    jobs = {}
+    for seed_id in (None, 2):
+        for k in (4, 6):
+            sc.setJobGroup(f"pr-{seed_id}-{k}", "pagerank job count")
+            pagerank(edges, max_iter=k, tol=None, seed_id=seed_id).collect()
+            sc.setJobGroup("", "")
+            group = sc.statusTracker().getJobIdsForGroup(f"pr-{seed_id}-{k}")
+            jobs[seed_id, k] = len(group)
+    delta = {s: jobs[s, 6] - jobs[s, 4] for s in (None, 2)}
+    assert delta[None] == delta[2] == 4, jobs
 
 
 def test_checkpoint_discipline_depth6_identical(spark, sf_small):
@@ -393,16 +379,21 @@ def test_weighted_pagerank_matches_python_power_iteration(spark):
         assert abs(got[v] - ranks[v]) < 1e-9, (v, got[v], ranks[v])
 
 
-def test_weighted_pagerank_rejects_nonpositive_weights(spark):
-    import pytest
-
-    from cricket_analytics_nosql_spark.operators.graph import pagerank
-
-    bad = spark.createDataFrame(
-        [(0, 1, 2.0), (1, 0, 0.0)], "src long, dst long, weight double"
-    )
+@pytest.mark.parametrize("seed_id", [None, 0])
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [(0, 1, 2.0), (1, 0, 0.0)],  # zero out-mass at vertex 1
+        [(0, 1, 2.0), (0, 2, -1.0), (1, 0, 1.0)],  # negative edge
+    ],
+    ids=["zero", "negative"],
+)
+def test_weighted_pagerank_rejects_nonpositive_weights(spark, seed_id, rows):
+    bad = spark.createDataFrame(rows, "src long, dst long, weight double")
     with pytest.raises(ValueError, match="positive"):
-        pagerank(bad, max_iter=2, tol=None, weight_col="weight")
+        pagerank(
+            bad, max_iter=2, tol=None, weight_col="weight", seed_id=seed_id
+        )
 
 
 def _duckdb_pagerank_sql(k_iters: int, d: float, weighted: bool) -> str:

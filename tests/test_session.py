@@ -68,3 +68,37 @@ def test_session_confs_are_written_only_by_session_and_sources():
         if re.search(r"\.conf\.set\(", line)
     ]
     assert offenders == []
+
+
+def test_python_workers_import_the_package_from_any_directory(
+    sf_small, tmp_path
+):
+    """``get_spark`` ships the package to the Python workers, so a
+    query whose UDF lives in the package runs from a working
+    directory other than the repo root (without the zip the worker
+    raises ``ModuleNotFoundError: cricket_analytics_nosql_spark``)."""
+    import os
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {str(root)!r})\n"
+        "from cricket_analytics_nosql_spark.catalog import all_queries\n"
+        "from cricket_analytics_nosql_spark.session import get_spark\n"
+        "spark = get_spark('worker-imports', cpus=2)\n"
+        "q = all_queries()['multimodal_decode']\n"
+        f"print('rows', len(q.fn(spark, {sf_small!r}).collect()))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-4000:]
+    assert int(run.stdout.split()[-1]) > 0, run.stdout
