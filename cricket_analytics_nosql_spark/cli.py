@@ -29,7 +29,8 @@ import argparse
 import os
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def _spark() -> SparkSession:
@@ -46,6 +47,13 @@ def _show(
         df.explain("formatted")
     else:
         df.show(n, truncate=False)
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count observed on the job that writes it,
+    so a summary line costs no job of its own."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 def cmd_etl(args: argparse.Namespace) -> int:
@@ -68,17 +76,18 @@ def cmd_etl(args: argparse.Namespace) -> int:
             os.path.join(args.out, "quarantine")
         )
         print(f"quarantined {n_bad} corrupt file(s)", file=sys.stderr)
-    matches = normalize_matches(good)
-    deliveries = flatten_deliveries(good)
+    matches, n_matches = _counted(normalize_matches(good))
+    deliveries, n_deliveries = _counted(flatten_deliveries(good))
     matches.write.mode("overwrite").parquet(
         os.path.join(args.out, "matches.parquet")
     )
     deliveries.write.mode("overwrite").parquet(
         os.path.join(args.out, "deliveries.parquet")
     )
+    raw.unpersist()  # the parse cache split_quarantine pinned
     print(
-        f"wrote {matches.count()} matches, {deliveries.count()} deliveries "
-        f"to {args.out}"
+        f"wrote {n_matches.get['n']} matches, "
+        f"{n_deliveries.get['n']} deliveries to {args.out}"
     )
     return 0
 
@@ -91,8 +100,6 @@ def _load_deliveries(
 
 
 def cmd_graph(args: argparse.Namespace) -> int:
-    from pyspark.sql import functions as F
-
     from cricket_analytics_nosql_spark.operators.graph import (
         faced_edges,
         player_pagerank,
@@ -102,12 +109,15 @@ def cmd_graph(args: argparse.Namespace) -> int:
 
     spark = _spark()
     deliveries = _load_deliveries(spark, args.warehouse, args.limit)
-    vertices = player_vertices(deliveries)
-    edges = faced_edges(deliveries)
+    vertices, n_vertices = _counted(
+        player_vertices(deliveries).withColumnRenamed("name", "id")
+    )
+    edges, n_edges = _counted(faced_edges(deliveries))
     out = os.path.join(args.warehouse, "graph")
-    write_graph(vertices.withColumnRenamed("name", "id"), edges, out)
+    write_graph(vertices, edges, out)
     print(
-        f"wrote {vertices.count()} vertices, {edges.count()} edges to {out}"
+        f"wrote {n_vertices.get['n']} vertices, {n_edges.get['n']} edges "
+        f"to {out}"
     )
     _show(
         "PageRank top hubs (cypher_queries.cypher:28-34)",

@@ -7,15 +7,22 @@ DataFrames — ``vertices(id, ...)`` and ``edges(src, dst, ...)`` —
 and every Cypher query shape is a join/aggregation on them.
 
 PageRank (G2) is the one algorithm with real iterative content.
-One power loop (``pagerank``) serves global and personalized
-PageRank alike: each round materializes one power vector with one
-fixed-shape job (links ⋈ w → partial/final sum) and a
-``localCheckpoint`` that truncates lineage — without it the plan
-tree doubles per iteration and the driver OOMs long before 100 TB is
-the problem. Only O(1) scalars reach the driver per round (the
-power vector's mass and row count, observed on the round's own job);
-dangling mass and convergence are driver-side arithmetic over them,
-and ranks themselves stay distributed.
+One coefficient loop (``pagerank``) serves global and personalized
+PageRank alike: the driver tracks the Krylov coefficients, dangling
+mass and convergence as plain floats, and only the power vectors
+w_{j+1} = A(w_j) and their final weighted sum touch the graph. Those
+have two kernels, picked by the edge count measured on the entry
+checkpoint job. An edge list that fits one loop task
+(``session.ROWS_PER_TASK``) is collected once through Arrow and
+iterated in numpy on the driver: two jobs per call beyond the
+input's own upstream, however many rounds, where a Spark round pays
+two job floors plus its planning. A larger one runs one
+fixed-shape job per round (links ⋈ w → partial/final sum) and a
+``localCheckpoint`` that truncates lineage
+— without it the plan tree doubles per iteration and the driver
+OOMs long before 100 TB is the problem; there only O(1) scalars
+reach the driver per round (the power vector's mass and row count,
+observed on the round's own job) and ranks stay distributed.
 
 Generic testdata binding: the customer↔supplier trade graph
 (who bought from whom, via lineitem×orders). For PageRank the
@@ -27,11 +34,18 @@ conflate customer k with supplier k.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from cricket_analytics_nosql_spark.operators.spec import QuerySpec
-from cricket_analytics_nosql_spark.session import fixed_plan, loop_partitions
+from cricket_analytics_nosql_spark.session import (
+    ROWS_PER_TASK,
+    fixed_plan,
+    loop_partitions,
+)
 from cricket_analytics_nosql_spark.sources.tables import load_table
 
 
@@ -144,10 +158,13 @@ def pagerank(
     (gds.pageRank's relationshipWeightProperty): mass leaves each
     vertex proportionally to edge weight, w/Σw(src), instead of
     uniformly 1/out_deg. Either way the per-edge transition ratio is
-    PRECOMPUTED into the checkpointed link table, so the iteration
-    multiplies instead of divides and the loop below is identical for
-    both modes (row-stochastic either way — the dangling-mass
-    arithmetic needs no change).
+    PRECOMPUTED once, so the iteration multiplies instead of divides
+    and the loop is identical for both modes (row-stochastic either
+    way — the dangling-mass arithmetic needs no change). A null
+    ``src``/``dst``, or a null or non-positive weight, raises
+    ``ValueError`` (gds rejects both): a src whose weights sum to
+    0/NULL would lose its mass as phantom dangling mass, and a
+    negative weight would make p negative.
 
     The power iteration is linear, and that linearity is the whole
     performance design. With A(x)(dst) = Σ_{src→dst} x(src)·p(src→dst)
@@ -158,110 +175,264 @@ def pagerank(
     where w_1 = A(r) and w_{j+1} = A(w_j) are iteration-invariant
     "power vectors" of the graph, and the coefficients a_{k,j} plus
     the dangling-mass scalars are plain Python floats the driver
-    tracks. So each iteration materializes exactly ONE new frame
-    w_{k+1} via ONE fixed-shape job — links ⋈ w_k → project →
-    partial/final sum — whose generated code never changes (no
-    per-iteration literals → whole-stage-codegen cache hits every
-    round; with the dangling-mass scalar baked in as a literal, each
-    round recompiled its stage — measured ~0.3 s/iteration at sf0.1,
-    the dominant loop cost). Σw_{k+1} is measured by an
-    ``Observation`` on the pre-agg rows of the same job and its row
-    count by a second one on the agg output, so only O(1) bytes reach
-    the driver per round. A personalized w_j holds only the vertices
-    j hops from the seed, so its frames are reach-bounded, not
-    vertex-bounded — what makes per-seed PPR tractable at 100 TB.
+    tracks (``_power_loop``). Dangling mass needs no pass of its own:
+    the mass M = Σr (the vertex count n globally, 1 personalized) is
+    conserved, so dm_k = M − Σ_v contrib_k(v) = M − Σ_j a_{k,j}·S_j
+    with S_j = Σw_j, and base_k = (1−d) + d·dm_k/M. Convergence
+    (``tol``): |contrib_{k+1} − contrib_k|₁ ≤ Σ_j |Δa_j|·S_j (all
+    w_j ≥ 0) — a free bound, checked every ``check_every`` rounds
+    against ``tol·M``. The final ranks are base + d·contrib on every
+    vertex globally; personalized, d·contrib on the vertices the walk
+    reached plus base on the seed.
 
-    Dangling mass needs no pass of its own: the mass M = Σr (the
-    vertex count n globally, 1 personalized) is conserved, so
-    dm_k = M − Σ_v contrib_k(v) = M − Σ_j a_{k,j}·S_j with S_j = Σw_j
-    — driver-side arithmetic, and base_k = (1−d) + d·dm_k/M. The
-    final ranks are one linear-combination job (union of a_j-scaled
-    w_j frames → sum per vertex), then globally one join against the
-    vertex universe, personalized one ``(seed, base)`` row unioned
-    into d·contrib and summed per id.
+    One coefficient loop, two matvec kernels. Only the matvec
+    w_{j+1} = A(w_j) and the readout Σ_j a_j·w_j touch the graph,
+    and the edge count m, measured on the entry checkpoint job, picks
+    where they run:
 
-    Convergence (``tol``): |contrib_{k+1} − contrib_k|₁ ≤
-    Σ_j |Δa_j|·S_j (all w_j ≥ 0) — a free driver-side bound, checked
-    every ``check_every`` rounds against ``tol·M``; no probe jobs.
+    - m ≤ ``session.ROWS_PER_TASK`` (one loop task's rows;
+      ``_DriverPower``): the edge columns are collected once through
+      Arrow, ids of any type map to indices with ``np.unique``, each
+      matvec is an ``np.bincount``, and the ranks return through
+      Arrow. Two jobs per call beyond the input's own upstream (the
+      checkpoint and the collect) however many rounds run, where a
+      Spark round pays two job floors plus its planning. The collect is bounded by one task of
+      edges; a broadcast round below routes up to
+      ``broadcast_max_vertices`` vertex rows through the driver every
+      round.
+    - Larger edge lists (``_SparkPower``): each round materializes
+      one power vector with ONE fixed-shape job — links ⋈ w_k →
+      project → partial/final sum — whose generated code never
+      changes (no per-iteration literals → whole-stage-codegen cache
+      hits every round; with the dangling-mass scalar baked in as a
+      literal, each round recompiled its stage — measured
+      ~0.3 s/iteration at sf0.1). Σw_{k+1} is measured by an
+      ``Observation`` on the pre-agg rows of the same job and its row
+      count by a second one on the agg output, so only O(1) bytes
+      reach the driver per round and the ranks stay distributed. A
+      personalized w_j holds only the vertices j hops from the seed,
+      so its frames are reach-bounded, not vertex-bounded. The
+      readout is one union+sum job, then globally one join against
+      the vertex universe, personalized one ``(seed, base)`` row
+      unioned into d·contrib and summed per id.
 
-    The loop runs under ``session.fixed_plan`` (AQE off, shuffle
+    The Spark loop runs under ``session.fixed_plan`` (AQE off, shuffle
     partitions = ``loop_partitions(m)``): under AQE Spark 4.1 reports
     an adaptive plan's partitioning as unknown, so the keyed link
-    checkpoint below would lose its key and every round would
-    re-shuffle it (measured cost in ``fixed_plan``'s docstring).
+    checkpoint would lose its key and every round would re-shuffle it
+    (measured cost in ``fixed_plan``'s docstring).
 
     Lineage discipline (SURVEY §7.8 risk 1): every w_j is
-    ``localCheckpoint``-ed, and the big edge list is materialized
-    once, partitioned by dst. While the last w frame's measured row
-    count is ≤ ``broadcast_max_vertices`` it broadcasts into the join,
-    so the edge list never shuffles; once a frame exceeds it, the
-    link table is re-keyed on the join key once and each later round
-    shuffles only vertex-sized frames (co-partitioned, AQE off, fixed
+    ``localCheckpoint``-ed (without it the plan tree doubles per
+    round), and the big edge list is materialized once, partitioned
+    by dst. While the last w frame's measured row count is ≤
+    ``broadcast_max_vertices`` it broadcasts into the join, so the
+    edge list never shuffles; once a frame exceeds it, the link table
+    is re-keyed on the join key once and each later round shuffles
+    only vertex-sized frames (co-partitioned, AQE off, fixed
     partition count → no exchange beyond the agg itself).
     """
     spark = edges.sparkSession
     # Materialize the edge list ONCE before anything else: it feeds
-    # several consumers (out-degrees, link table, weight check) and
-    # is typically the output of an expensive upstream join — left
+    # several consumers (the collect, or out-mass and the link table)
+    # and is typically the output of an expensive upstream join — left
     # lazy, that upstream would re-execute once per consumer. This
     # runs under the session's normal AQE config: the upstream build
-    # is an arbitrary big query and wants adaptive planning. The
-    # edge count rides along on the materialization job.
+    # is an arbitrary big query and wants adaptive planning. The edge
+    # count and both input checks ride along on the materialization
+    # job.
+    bad_weight = (
+        F.lit(False)
+        if weight_col is None
+        else F.col(weight_col).isNull() | (F.col(weight_col) <= 0)
+    )
     e_obs = Observation()
-    edges = edges.observe(e_obs, F.count(F.lit(1)).alias("m")).localCheckpoint()
-    m = int(e_obs.get["m"])
+    edges = edges.observe(
+        e_obs,
+        F.count(F.lit(1)).alias("m"),
+        F.count_if(F.col("src").isNull() | F.col("dst").isNull()).alias(
+            "null_ids"
+        ),
+        F.count_if(bad_weight).alias("bad_weights"),
+    ).localCheckpoint()
+    stats = e_obs.get
+    if stats["null_ids"]:
+        raise ValueError("pagerank: src and dst must be non-null on every edge")
+    if stats["bad_weights"]:
+        raise ValueError(
+            f"pagerank: weight_col {weight_col!r} must be "
+            "positive and non-null on every edge"
+        )
+    m = int(stats["m"])
     if m == 0 and seed_id is None:
         return spark.createDataFrame([], "id long, pagerank double")
 
+    d = float(damping)
+    if m <= ROWS_PER_TASK:
+        power = _DriverPower(edges, weight_col, seed_id)
+        return _power_loop(power, d, max_iter, tol, check_every)
     # One knob sizes BOTH sides of the per-round job: the link scan's
-    # task count (links are repartitioned to this below) and the
-    # contrib shuffle (measured at 1.2M edges on local[32]: 8 parts ≈
+    # task count (links are repartitioned to this) and the contrib
+    # shuffle (measured at 1.2M edges on local[32]: 8 parts ≈
     # 0.23 s/round vs 64 natural ≈ 0.35 s).
     loop_parts = loop_partitions(m)
-    d = float(damping)
     with fixed_plan(spark, loop_parts):
-        if weight_col is None:
-            out_mass = edges.groupBy("src").agg(
-                F.count(F.lit(1)).cast("double").alias("w_out")
+        power = _SparkPower(
+            edges, weight_col, seed_id, loop_parts, broadcast_max_vertices
+        )
+        return _power_loop(power, d, max_iter, tol, check_every)
+
+
+def _power_loop(
+    power: _DriverPower | _SparkPower,
+    d: float,
+    max_iter: int,
+    tol: float | None,
+    check_every: int,
+) -> DataFrame:
+    """``pagerank``'s coefficient loop, one body for both kernels:
+    the Krylov coefficients, the dangling-mass and base arithmetic,
+    the stop once A annihilates a power vector, and the ``tol``
+    bound. ``power`` holds w_1, S_1 and the conserved mass M, and
+    supplies the matvec and the readout."""
+    ws, sums, mass = [power.w1], [power.s1], power.mass
+    coef = [1.0]  # contrib_1 = w_1
+    # A annihilates a power vector (Σw_j = 0 with w ≥ 0 ⇒ w_j is
+    # identically zero ⇒ every later w is zero too: A is linear and
+    # positivity-preserving). From that point the remaining rounds
+    # are pure coefficient arithmetic — no more matvecs. Not a corner
+    # case: any DAG reaches it at depth ≤ diameter, and a
+    # one-directional trade graph reaches it at j = 2.
+    exhausted = sums[0] == 0.0
+    for i in range(1, max_iter):
+        dm = mass - sum(a * s for a, s in zip(coef, sums))
+        base = (1.0 - d) + d * dm / mass
+        if not exhausted:
+            w_next, s_next = power.matvec(ws[-1])
+            if s_next == 0.0:
+                exhausted = True  # zero vector: drop it, and all later
+            else:
+                ws.append(w_next)
+                sums.append(s_next)
+        # truncation is exact: coefficients shifted past len(ws)
+        # would multiply identically-zero vectors
+        new_coef = ([base] + [d * a for a in coef])[: len(ws)]
+        converged = (
+            tol is not None
+            and (i + 1) % check_every == 0
+            and sum(
+                abs(a - b) * s
+                for a, b, s in zip(new_coef, coef + [0.0], sums)
             )
-            edge_w = F.lit(1.0)
+            < tol * mass
+        )
+        coef = new_coef
+        if converged:
+            break
+    dm = mass - sum(a * s for a, s in zip(coef, sums))
+    return power.ranks(ws, coef, (1.0 - d) + d * dm / mass, d)
+
+
+class _DriverPower:
+    """``pagerank``'s numpy kernel, for edge lists of at most
+    ``ROWS_PER_TASK`` rows: every power vector is a dense float64
+    array over the ``np.unique`` id order, and A(w) is one
+    ``np.bincount`` over the edge indices."""
+
+    def __init__(
+        self, edges: DataFrame, weight_col: str | None, seed_id
+    ) -> None:
+        self.spark = edges.sparkSession
+        self.seed_id = seed_id
+        weight = F.lit(1.0) if weight_col is None else F.col(weight_col)
+        t = edges.select(
+            "src", "dst", weight.cast("double").alias("w")
+        ).toArrow()
+        m = t.num_rows
+        self.ids, idx = np.unique(
+            np.concatenate([t["src"].to_numpy(), t["dst"].to_numpy()]),
+            return_inverse=True,
+        )
+        self.src, self.dst = idx[:m], idx[m:]
+        w = t["w"].to_numpy()
+        # w/Σw(src) as the Spark kernel divides it: Σw is exact for
+        # integer-valued weights, so both kernels hold the same p
+        self.p = w / np.bincount(self.src, w, len(self.ids))[self.src]
+        # the Spark kernel's result schema: the id type its unions
+        # widen to, and a global rank that is never null
+        ids = edges.select(F.col("src").alias("id")).union(
+            edges.select(F.col("dst").alias("id"))
+        )
+        if seed_id is not None:
+            ids = ids.union(edges.select(F.lit(seed_id).alias("id")))
+        self.schema = StructType(
+            [
+                StructField("id", ids.schema["id"].dataType),
+                StructField("pagerank", DoubleType(), seed_id is not None),
+            ]
+        )
+        if seed_id is None:
+            r, self.mass = np.ones(len(self.ids)), float(len(self.ids))
         else:
-            # fail fast on the positive-weight precondition (gds
-            # rejects non-positive relationship weights too): a src
-            # whose weights sum to 0/NULL would get p = NULL and its
-            # mass silently dropped as phantom dangling mass, and a
-            # negative weight would make p negative. One bounded
-            # probe over the already-checkpointed edges —
-            # short-circuits at the first offending row.
-            bad = (
-                edges.filter(
-                    F.col(weight_col).isNull() | (F.col(weight_col) <= 0)
-                )
-                .limit(1)
-                .count()
-            )
-            if bad:
-                raise ValueError(
-                    f"pagerank: weight_col {weight_col!r} must be "
-                    "positive and non-null on every edge"
-                )
-            out_mass = edges.groupBy("src").agg(
-                F.sum(F.col(weight_col).cast("double")).alias("w_out")
-            )
-            edge_w = F.col(weight_col).cast("double")
+            r, self.mass = (self.ids == seed_id).astype(float), 1.0
+        self.w1, self.s1 = self.matvec(r)
+
+    def matvec(self, w: np.ndarray) -> tuple[np.ndarray, float]:
+        c = w[self.src] * self.p
+        return np.bincount(self.dst, c, len(self.ids)), float(c.sum())
+
+    def ranks(self, ws, coef, base: float, d: float) -> DataFrame:
+        contrib = sum(a * w for a, w in zip(coef, ws))
+        if self.seed_id is None:
+            ids, ranks = self.ids, base + d * contrib
+        else:
+            seed = self.ids == self.seed_id
+            ranks = d * contrib
+            ranks[seed] += base
+            # rows: the vertices some power vector reached, plus the
+            # seed even when the graph does not hold it
+            keep = seed | np.logical_or.reduce([w != 0 for w in ws])
+            ids, ranks = self.ids[keep], ranks[keep]
+            if not seed.any():
+                ids = np.append(ids, self.seed_id)
+                ranks = np.append(ranks, base)
+        table = pa.table({"id": ids, "pagerank": ranks})
+        return self.spark.createDataFrame(table, self.schema)
+
+
+class _SparkPower:
+    """``pagerank``'s Spark kernel, for edge lists above
+    ``ROWS_PER_TASK`` rows: every power vector is a checkpointed
+    ``(dst, x)`` frame made by one ``_pagerank_round`` job. Build it
+    inside ``fixed_plan(spark, loop_parts)``."""
+
+    def __init__(
+        self,
+        edges: DataFrame,
+        weight_col: str | None,
+        seed_id,
+        loop_parts: int,
+        broadcast_max_vertices: int,
+    ) -> None:
+        self.spark = edges.sparkSession
+        self.seed_id = seed_id
+        self.loop_parts = loop_parts
+        self.max_bcast = broadcast_max_vertices
+        edge_w = (
+            F.lit(1.0) if weight_col is None else F.col(weight_col).cast("double")
+        )
         # out_mass materializes first (src-count observed on the same
         # job) so its own join side can be decided before the link
         # build; it is src-sized ≤ n.
         om_obs = Observation()
         out_mass = (
-            out_mass.observe(om_obs, F.count(F.lit(1)).alias("n_src"))
+            edges.groupBy("src")
+            .agg(F.sum(edge_w).alias("w_out"))
+            .observe(om_obs, F.count(F.lit(1)).alias("n_src"))
             .localCheckpoint()
         )
         n_src = int(om_obs.get["n_src"])
-        bcast_om = (
-            F.broadcast if n_src <= broadcast_max_vertices else (lambda df: df)
-        )
-        links = edges.join(bcast_om(out_mass), "src").select(
+        links = edges.join(self._bcast(n_src)(out_mass), "src").select(
             F.col("src").alias("id"),
             "dst",
             (edge_w / F.col("w_out")).alias("p"),
@@ -280,16 +451,18 @@ def pagerank(
         # in-degree < n, so one hot dst costs at most ~n/150k
         # task-widths of imbalance — bounded, unlike open-ended key
         # skew.
-        links = links.repartition(loop_parts, F.col("dst")).localCheckpoint()
-        keyed: DataFrame | None = None  # links by id, built on demand
+        self.links = links.repartition(
+            loop_parts, F.col("dst")
+        ).localCheckpoint()
+        self.keyed: DataFrame | None = None  # links by id, built on demand
 
         # w_1 = A(r), no join: Σ p over the in-edges of every vertex
         # (r = 1), or over the seed's own out-links (r = e_seed).
-        start = links if seed_id is None else links.filter(
+        start = self.links if seed_id is None else self.links.filter(
             F.col("id") == F.lit(seed_id)
         )
         obs1, rows1 = Observation(), Observation()
-        w1 = (
+        self.w1 = (
             start.select("dst", F.col("p").alias("c"))
             .observe(obs1, F.sum("c").alias("s"))
             .groupBy("dst")
@@ -297,18 +470,8 @@ def pagerank(
             .observe(rows1, F.count(F.lit(1)).alias("n"))
             .localCheckpoint()
         )
-        ws = [w1]
-        sums = [float(obs1.get["s"] or 0.0)]
-        w_rows = int(rows1.get["n"])
-        coef = [1.0]  # contrib_1 = w_1
-        # A annihilates a power vector (Σw_j = 0 with w ≥ 0 ⇒ w_j is
-        # identically zero ⇒ every later w is zero too: A is linear
-        # and positivity-preserving). From that point the remaining
-        # rounds are pure coefficient arithmetic — no more jobs. Not
-        # a corner case: any DAG reaches it at depth ≤ diameter, and
-        # a one-directional trade graph reaches it at j = 2.
-        exhausted = sums[0] == 0.0
-
+        self.s1 = float(obs1.get["s"] or 0.0)
+        self.w_rows = int(rows1.get["n"])
         if seed_id is None:
             # Vertex universe = src ∪ dst — but srcs are links' join
             # keys and every in-linked dst is already a w_1 row, so
@@ -316,97 +479,71 @@ def pagerank(
             # vertex-sized frame instead of re-scanning the edge list
             # twice (halves the distinct's input).
             n_obs = Observation()
-            vertices = (
-                links.select("id")
-                .union(w1.select(F.col("dst").alias("id")))
+            self.vertices = (
+                self.links.select("id")
+                .union(self.w1.select(F.col("dst").alias("id")))
                 .distinct()
                 .observe(n_obs, F.count(F.lit(1)).alias("n"))
                 .localCheckpoint()
             )
-            n = int(n_obs.get["n"])
-            mass = float(n)
+            self.n = int(n_obs.get["n"])
+            self.mass = float(self.n)
         else:
-            mass = 1.0
+            self.mass = 1.0
 
-        for i in range(1, max_iter):
-            dm = mass - sum(a * s for a, s in zip(coef, sums))
-            base = (1.0 - d) + d * dm / mass
-            if not exhausted:
-                small = w_rows <= broadcast_max_vertices
-                if not small and keyed is None:
-                    # one extra edge shuffle, amortized over every
-                    # remaining round
-                    keyed = links.repartition(
-                        loop_parts, F.col("id")
-                    ).localCheckpoint()
-                obs, rows = Observation(), Observation()
-                round_links = links if small else keyed
-                w_next = (
-                    _pagerank_round(round_links, ws[-1], obs, small)
-                    .observe(rows, F.count(F.lit(1)).alias("n"))
-                    .localCheckpoint()
-                )
-                s_next = float(obs.get["s"] or 0.0)
-                w_rows = int(rows.get["n"])
-                if s_next == 0.0:
-                    exhausted = True  # zero frame: drop it, and all later
-                else:
-                    ws.append(w_next)
-                    sums.append(s_next)
-            # truncation is exact: coefficients shifted past len(ws)
-            # would multiply identically-zero frames
-            new_coef = ([base] + [d * a for a in coef])[: len(ws)]
-            if tol is not None and (i + 1) % check_every == 0:
-                padded = coef + [0.0]
-                bound = sum(
-                    abs(a - b) * s for a, b, s in zip(new_coef, padded, sums)
-                )
-                coef = new_coef
-                if bound < tol * mass:
-                    break
-            else:
-                coef = new_coef
+    def _bcast(self, rows: int):
+        return F.broadcast if rows <= self.max_bcast else (lambda df: df)
 
-    dm = mass - sum(a * s for a, s in zip(coef, sums))
-    base = (1.0 - d) + d * dm / mass
-    # contrib_K = Σ_j coef_j · w_j — one union+sum job, vertex-sized.
-    scaled = [
-        w.select("dst", (F.col("x") * F.lit(a)).alias("c"))
-        for w, a in zip(ws, coef)
-    ]
-    combined = scaled[0]
-    for part in scaled[1:]:
-        combined = combined.unionByName(part)
-    contribs = combined.groupBy("dst").agg(F.sum("c").alias("contrib"))
-    if seed_id is not None:
-        # the restart share lands on the seed alone
-        restart = spark.range(1).select(
-            F.lit(seed_id).alias("dst"), F.lit(base).alias("c")
+    def matvec(self, w: DataFrame) -> tuple[DataFrame, float]:
+        small = self.w_rows <= self.max_bcast
+        if not small and self.keyed is None:
+            # one extra edge shuffle, amortized over every remaining
+            # round
+            self.keyed = self.links.repartition(
+                self.loop_parts, F.col("id")
+            ).localCheckpoint()
+        obs, rows = Observation(), Observation()
+        w_next = (
+            _pagerank_round(self.links if small else self.keyed, w, obs, small)
+            .observe(rows, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint()
         )
-        return (
-            contribs.select("dst", (F.lit(d) * F.col("contrib")).alias("c"))
-            .unionByName(restart)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("c").alias("pagerank"))
-        )
-    # vertex universe joined ONCE, at the end
-    maybe_bcast = (
-        F.broadcast if n <= broadcast_max_vertices else (lambda df: df)
-    )
-    return (
-        vertices.join(
-            maybe_bcast(contribs.withColumnRenamed("dst", "cdst")),
-            vertices.id == F.col("cdst"),
+        self.w_rows = int(rows.get["n"])
+        return w_next, float(obs.get["s"] or 0.0)
+
+    def ranks(self, ws, coef, base: float, d: float) -> DataFrame:
+        # contrib = Σ_j coef_j · w_j — one union+sum job, vertex-sized.
+        scaled = [
+            w.select("dst", (F.col("x") * F.lit(a)).alias("c"))
+            for w, a in zip(ws, coef)
+        ]
+        combined = scaled[0]
+        for part in scaled[1:]:
+            combined = combined.unionByName(part)
+        contribs = combined.groupBy("dst").agg(F.sum("c").alias("contrib"))
+        if self.seed_id is not None:
+            # the restart share lands on the seed alone
+            restart = self.spark.range(1).select(
+                F.lit(self.seed_id).alias("dst"), F.lit(base).alias("c")
+            )
+            return (
+                contribs.select("dst", (F.lit(d) * F.col("contrib")).alias("c"))
+                .unionByName(restart)
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum("c").alias("pagerank"))
+            )
+        # vertex universe joined ONCE, at the end
+        return self.vertices.join(
+            self._bcast(self.n)(contribs.withColumnRenamed("dst", "cdst")),
+            self.vertices.id == F.col("cdst"),
             "left",
-        )
-        .select(
+        ).select(
             "id",
             (
                 F.lit(base)
                 + F.lit(d) * F.coalesce(F.col("contrib"), F.lit(0.0))
             ).alias("pagerank"),
         )
-    )
 
 
 def _pagerank_round(

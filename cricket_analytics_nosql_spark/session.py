@@ -114,12 +114,19 @@ def _ship_package(spark: SparkSession) -> None:
     sc.addPyFile(path)
 
 
+# The row budget of one loop task: iterative loops size their
+# exchanges by it, and an input of at most this many rows is small
+# enough to iterate on the driver instead (``graph.pagerank``).
+ROWS_PER_TASK = 150_000
+
+
 def loop_partitions(rows: int) -> int:
     """Partition count for an iterative loop's exchanges, sized from
-    a measured row count: ~150k rows per task. Locally the loops are
-    task-launch-bound, so few fat partitions win; at cluster scale
-    the same formula keeps each partition comfortably in memory."""
-    return max(2, rows // 150_000)
+    a measured row count: ~``ROWS_PER_TASK`` rows per task. Locally
+    the loops are task-launch-bound, so few fat partitions win; at
+    cluster scale the same formula keeps each partition comfortably
+    in memory."""
+    return max(2, rows // ROWS_PER_TASK)
 
 
 @contextmanager

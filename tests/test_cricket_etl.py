@@ -294,23 +294,42 @@ def test_cricket_pipeline_query(spark):
     ]
 
 
-def test_cli_end_to_end(spark, tmp_path):
+def test_cli_end_to_end(spark, tmp_path, capsys):
     """The reference's three script entry points (SURVEY §3) via the
-    CLI twins: etl → graph → analytics, chained over one warehouse."""
+    CLI twins: etl → graph → analytics, chained over one warehouse.
+    The ``wrote ...`` summaries report the rows the writes wrote, and
+    ``etl`` releases the parse cache it pinned."""
     from cricket_analytics_nosql_spark.cli import main
     from cricket_analytics_nosql_spark.sources.cricket_fixtures import (
         write_demo_dir,
     )
 
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
     wh = str(tmp_path / "wh")
+    capsys.readouterr()
     assert main(["etl", "--data-dir", write_demo_dir(), "--out", wh]) == 0
+    etl_out = capsys.readouterr().out
+    # no RDD persisted during etl is left persisted (RDDs persisted
+    # earlier may be cleaned meanwhile, so this is a subset test)
+    assert persisted() <= before
     matches = spark.read.parquet(os.path.join(wh, "matches.parquet"))
     deliveries = spark.read.parquet(os.path.join(wh, "deliveries.parquet"))
     assert matches.count() == 4 and deliveries.count() > 0
+    assert etl_out == (
+        f"wrote 4 matches, {deliveries.count()} deliveries to {wh}\n"
+    )
     assert main(["graph", "--warehouse", wh]) == 0
+    graph_out = capsys.readouterr().out
     vertices = spark.read.parquet(os.path.join(wh, "graph", "vertices"))
     edges = spark.read.parquet(os.path.join(wh, "graph", "edges"))
     assert vertices.count() > 0 and edges.count() > 0
+    assert graph_out.startswith(
+        f"wrote {vertices.count()} vertices, {edges.count()} edges to "
+        f"{os.path.join(wh, 'graph')}\n"
+    )
     assert main(["analytics", "--warehouse", wh, "--limit", "1000"]) == 0
 
 

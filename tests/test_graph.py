@@ -65,9 +65,19 @@ def test_pagerank_empty(spark):
     assert pagerank(_edges(spark, [])).count() == 0
 
 
+@pytest.fixture
+def spark_loop(monkeypatch):
+    """Send every edge list through ``pagerank``'s Spark kernel: the
+    driver-kernel gate drops to -1, below any edge count, so the
+    empty edge list takes the Spark loop too."""
+    from cricket_analytics_nosql_spark.operators import graph
+
+    monkeypatch.setattr(graph, "ROWS_PER_TASK", -1)
+
+
 @pytest.mark.parametrize("seed_id", [None, 2])
 def test_pagerank_copartitioned_branch_matches_broadcast(
-    spark, sf_small, seed_id
+    spark, sf_small, seed_id, spark_loop
 ):
     """The large-graph path (broadcast_max_vertices exceeded → link
     table re-keyed on the join key, w frames shuffled instead of
@@ -75,7 +85,7 @@ def test_pagerank_copartitioned_branch_matches_broadcast(
     the physical strategy may not change the fixed point. Forced with
     broadcast_max_vertices=0 on the real sf0.001 trade graph (the
     bidirectional PageRank binding, cycles and all), global and
-    seeded."""
+    seeded, with the Spark kernel forced by ``spark_loop``."""
     from cricket_analytics_nosql_spark.operators.graph import trade_graph_edges
 
     edges = trade_graph_edges(spark, sf_small)
@@ -130,9 +140,12 @@ def test_seeded_pagerank_python_reference(spark):
     assert max(got, key=got.get) == 0  # restart keeps the seed on top
 
 
-def test_seeded_pagerank_rounds_cost_what_global_rounds_cost(spark, sf_small):
+def test_seeded_pagerank_rounds_cost_what_global_rounds_cost(
+    spark, sf_small, spark_loop
+):
     """Global and seeded PageRank share one power loop, so two more
-    rounds cost the same jobs in both modes: on the default gate every
+    rounds cost the same jobs in both modes of the Spark kernel
+    (forced by ``spark_loop``): on the default broadcast gate every
     round of this graph broadcasts (w rows ≪ 1M at sf0.001), and a
     broadcast round is two jobs, the w broadcast and the links ⋈ w
     aggregation."""
@@ -150,6 +163,117 @@ def test_seeded_pagerank_rounds_cost_what_global_rounds_cost(spark, sf_small):
             jobs[seed_id, k] = len(group)
     delta = {s: jobs[s, 6] - jobs[s, 4] for s in (None, 2)}
     assert delta[None] == delta[2] == 4, jobs
+
+
+def _kernel_cases(spark, sf_small):
+    """(edges, pagerank kwargs) per case of the kernel-parity test."""
+    from cricket_analytics_nosql_spark.operators.graph import (
+        trade_edges,
+        trade_graph_edges,
+    )
+
+    trade = trade_graph_edges(spark, sf_small)
+    # customer 2k → supplier 2k+1 only: w_2 = A(w_1) is all zero
+    one_way = trade_edges(spark, sf_small).select(
+        (F.col("src") * 2).alias("src"),
+        (F.col("dst") * 2 + 1).alias("dst"),
+        "weight",
+    )
+    # a cycle with a tail: 4 is dangling
+    dangling = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (1, 3), (3, 4)], "src long, dst long"
+    )
+    # the same shape on string ids: "D" is dangling
+    strs = _edges(spark, [("A", "B"), ("B", "C"), ("C", "A"), ("B", "D")])
+    empty = _edges(spark, [])
+    fixed = {"max_iter": 12, "tol": None}
+    return {
+        "trade": (trade, fixed),
+        "trade-seeded": (trade, {"max_iter": 8, "tol": None, "seed_id": 2}),
+        "trade-weighted": (trade, {**fixed, "weight_col": "weight"}),
+        "trade-tol": (trade, {"max_iter": 40, "tol": 1e-3}),
+        "one-way": (one_way, fixed),
+        "one-way-seeded": (one_way, {**fixed, "seed_id": 2}),
+        "dangling": (dangling, {"max_iter": 30}),
+        "dangling-seed": (dangling, {"max_iter": 6, "seed_id": 4}),
+        "strings": (strs, {}),
+        "strings-seeded": (strs, {"seed_id": "B"}),
+        "strings-dangling-seed": (strs, {"seed_id": "D"}),
+        "empty": (empty, {}),
+        "empty-seeded": (empty, {"seed_id": "A"}),
+    }
+
+
+@pytest.fixture(scope="module")
+def duel_edges(deliveries):
+    return faced_edges(deliveries).groupBy("src", "dst").agg(
+        F.count(F.lit(1)).alias("weight")
+    )
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "trade", "trade-seeded", "trade-weighted", "trade-tol", "one-way",
+        "one-way-seeded", "dangling", "dangling-seed", "strings",
+        "strings-seeded", "strings-dangling-seed", "empty", "empty-seeded",
+        "duel", "duel-seeded", "duel-weighted",
+    ],
+)
+def test_driver_and_spark_kernels_agree(
+    spark, sf_small, duel_edges, monkeypatch, case
+):
+    """``pagerank``'s two matvec kernels under the one coefficient
+    loop: the numpy kernel (edge lists ≤ ``ROWS_PER_TASK``) and the
+    Spark kernel (forced by a gate of -1) return the same rows, the
+    same schema and ranks within 1e-12, on the sf0.001 trade graph
+    (global, seeded, weighted, tol-stopped), a one-directional graph
+    whose basis is exhausted at j = 2, dangling vertices and a
+    dangling seed, string ids (hand graph and the fixture duel graph)
+    and the empty graph."""
+    from cricket_analytics_nosql_spark.operators import graph
+
+    cases = _kernel_cases(spark, sf_small)
+    cases.update(
+        {
+            "duel": (duel_edges, {}),
+            "duel-seeded": (duel_edges, {"seed_id": "Kohli"}),
+            "duel-weighted": (duel_edges, {"weight_col": "weight"}),
+        }
+    )
+    edges, kw = cases[case]
+    driver = graph.pagerank(edges, **kw)
+    monkeypatch.setattr(graph, "ROWS_PER_TASK", -1)
+    spark_side = graph.pagerank(edges, **kw)
+    assert driver.schema == spark_side.schema
+    got = {r.id: r.pagerank for r in driver.collect()}
+    want = {r.id: r.pagerank for r in spark_side.collect()}
+    assert got.keys() == want.keys()
+    for v in want:
+        assert got[v] == pytest.approx(want[v], abs=1e-12), v
+
+
+@pytest.mark.parametrize("seed_id", [None, 2])
+@pytest.mark.parametrize("weight_col", [None, "weight"])
+def test_bounded_pagerank_runs_two_jobs(spark, sf_small, seed_id, weight_col):
+    """On an edge list that fits one task, ``pagerank`` runs two jobs
+    however many rounds it iterates — the entry checkpoint and the
+    Arrow collect of the edges — and its result is a local frame that
+    collects without a job."""
+    from cricket_analytics_nosql_spark.operators.graph import trade_graph_edges
+
+    sc = spark.sparkContext
+    edges = trade_graph_edges(spark, sf_small).localCheckpoint()
+    group = f"pr-bounded-{seed_id}-{weight_col}"
+    sc.setJobGroup(group, "pagerank job count")
+    try:
+        pagerank(
+            edges, max_iter=12, tol=None, weight_col=weight_col,
+            seed_id=seed_id,
+        ).collect()
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
 
 
 def test_checkpoint_discipline_depth6_identical(spark, sf_small):
@@ -379,21 +503,51 @@ def test_weighted_pagerank_matches_python_power_iteration(spark):
         assert abs(got[v] - ranks[v]) < 1e-9, (v, got[v], ranks[v])
 
 
-@pytest.mark.parametrize("seed_id", [None, 0])
-@pytest.mark.parametrize(
+_BAD_WEIGHTS = pytest.mark.parametrize(
     "rows",
     [
         [(0, 1, 2.0), (1, 0, 0.0)],  # zero out-mass at vertex 1
         [(0, 1, 2.0), (0, 2, -1.0), (1, 0, 1.0)],  # negative edge
+        [(0, 1, 2.0), (1, 0, None)],  # null weight
     ],
-    ids=["zero", "negative"],
+    ids=["zero", "negative", "null"],
 )
+
+
+@pytest.mark.parametrize("seed_id", [None, 0])
+@_BAD_WEIGHTS
 def test_weighted_pagerank_rejects_nonpositive_weights(spark, seed_id, rows):
     bad = spark.createDataFrame(rows, "src long, dst long, weight double")
     with pytest.raises(ValueError, match="positive"):
         pagerank(
             bad, max_iter=2, tol=None, weight_col="weight", seed_id=seed_id
         )
+
+
+@pytest.mark.parametrize("seed_id", [None, 0])
+@_BAD_WEIGHTS
+def test_spark_kernel_rejects_nonpositive_weights(
+    spark, seed_id, rows, spark_loop
+):
+    """The same check on the Spark kernel: it runs on the entry
+    checkpoint job, before either kernel starts."""
+    bad = spark.createDataFrame(rows, "src long, dst long, weight double")
+    with pytest.raises(ValueError, match="positive"):
+        pagerank(
+            bad, max_iter=2, tol=None, weight_col="weight", seed_id=seed_id
+        )
+
+
+@pytest.mark.parametrize("kernel", ["driver", "spark"])
+def test_pagerank_rejects_null_ids(spark, monkeypatch, kernel):
+    from cricket_analytics_nosql_spark.operators import graph
+
+    if kernel == "spark":
+        monkeypatch.setattr(graph, "ROWS_PER_TASK", -1)
+    for pairs in ([(0, 1), (1, None)], [(None, 1), (1, 0)]):
+        edges = spark.createDataFrame(pairs, "src long, dst long")
+        with pytest.raises(ValueError, match="non-null"):
+            graph.pagerank(edges)
 
 
 def _duckdb_pagerank_sql(k_iters: int, d: float, weighted: bool) -> str:
@@ -454,10 +608,12 @@ r{i} AS MATERIALIZED (
 
 @pytest.mark.parametrize("weighted", [False, True])
 def test_pagerank_matches_unrolled_duckdb(spark, sf_small, weighted):
-    """Full-vector differential: the Spark Krylov-formulated loop vs
-    12 literally-unrolled power iterations in DuckDB on the real
-    sf0.001 trade graph. Agreement to 1e-9 absolute on every vertex
-    — an independent engine, an independent formulation."""
+    """Full-vector differential: the Krylov-formulated loop (its
+    driver kernel at this size; the Spark kernel is pinned to it by
+    ``test_driver_and_spark_kernels_agree``) vs 12 literally-unrolled
+    power iterations in DuckDB on the real sf0.001 trade graph.
+    Agreement to 1e-9 absolute on every vertex — an independent
+    engine, an independent formulation."""
     from tools.parity import duckdb_connection
 
     from cricket_analytics_nosql_spark.operators.graph import trade_graph_edges
