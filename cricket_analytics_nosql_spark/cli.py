@@ -119,6 +119,7 @@ def cmd_graph(args: argparse.Namespace) -> int:
         f"wrote {n_vertices.get['n']} vertices, {n_edges.get['n']} edges "
         f"to {out}"
     )
+    # PageRank reads the FACED edges the write just cached
     _show(
         "PageRank top hubs (cypher_queries.cypher:28-34)",
         player_pagerank(deliveries).select(

@@ -40,7 +40,11 @@ from cricket_analytics_nosql_spark.operators.text import (
     shingles_col,
     tokens_col,
 )
-from cricket_analytics_nosql_spark.session import fixed_plan, loop_partitions
+from cricket_analytics_nosql_spark.session import (
+    fixed_plan,
+    loop_partitions,
+    persisted_per_input,
+)
 from cricket_analytics_nosql_spark.sources.tables import fan_out, load_table
 
 
@@ -78,48 +82,29 @@ LIMIT 100
 # 2. Exact n-gram Jaccard near-dup via inverted index
 # ---------------------------------------------------------------------------
 
-# persisted shingle indexes, keyed by the semantic hash of their
-# input frame (collisions disambiguated with sameSemantics)
-_SHINGLE_CACHE: dict[int, tuple[DataFrame, DataFrame]] = {}
-
-
+@persisted_per_input
 def _doc_shingles(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle) exploded pairs — the inverted index rows.
     Fanned out first: shingling is the CPU-dense step and must not
     run on however few splits the input file happened to have.
 
-    Persisted (MEMORY_AND_DISK — spillable, so safe at scale): every
-    caller fans the index into ≥2 consumers (sizes + both join
-    sides, or signatures + verification), and without a persist each
-    consumer re-runs the tokenize→shingle→explode pipeline — the
-    CPU-dominant step — from the raw text. At 100 TB this frame is
-    the one you'd materialize as a table; in-session persist is the
-    same decision one scope smaller.
+    Persisted (``session.persisted_per_input``): every caller fans
+    the index into ≥2 consumers (sizes + both join sides, or
+    signatures + verification), and without a persist each consumer
+    re-runs the tokenize→shingle→explode pipeline — the CPU-dominant
+    step — from the raw text. At 100 TB this frame is the one you'd
+    materialize as a table; in-session persist is the same decision
+    one scope smaller.
 
-    MEMOIZED per semantically-identical input (same discipline as
-    the streaming staging memo): without this, every call — the
-    jaccard and minhash queries each call it, and a bench repeats
-    each query 3× — persisted a FRESH copy of the same index and
-    never released it, accumulating storage until eviction pressure
-    made run times flap (observed 0.95 → 3.6 s on the same query in
-    one bench session). One input, one persisted index, however many
-    queries consume it. Caveats shared with any cache of scanned
-    data (including Spark's own persist): rewriting the underlying
-    files in-process serves the cached index. A dead cached entry
-    (stopped session) is detected and rebuilt."""
-    key = docs.semanticHash()
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is not None:
-        try:
-            if hit[0].sameSemantics(docs):
-                return hit[1]
-        except Exception:  # cached frame from a stopped SparkSession
-            del _SHINGLE_CACHE[key]
-    sh = fan_out(docs).select(
+    One persisted index per semantically-identical input: without
+    the memo, every call — the jaccard and minhash queries each call
+    it, and a bench repeats each query 3× — persisted a FRESH copy of
+    the same index and never released it, accumulating storage until
+    eviction pressure made run times flap (observed 0.95 → 3.6 s on
+    the same query in one bench session)."""
+    return fan_out(docs).select(
         "doc_id", F.explode(shingles_col(tokens_col(F.col("text")))).alias("s")
-    ).persist()
-    _SHINGLE_CACHE[key] = (docs, sh)
-    return sh
+    )
 
 
 def jaccard_pairs(docs: DataFrame, threshold: float) -> DataFrame:

@@ -24,6 +24,13 @@ OOMs long before 100 TB is the problem; there only O(1) scalars
 reach the driver per round (the power vector's mass and row count,
 observed on the round's own job) and ranks stay distributed.
 
+The reference's own graph is the player duel graph, loaded into
+Neo4j once and queried many times through a GDS named graph.
+``faced_edges`` is its projection, built once per ``deliveries``
+input and kept persisted: the first Cypher statement, graph write
+or ``gds.pageRank`` call on it pays the warehouse scan and the dedup
+shuffle, and every later one reads the cached FACED set.
+
 Generic testdata binding: the customer↔supplier trade graph
 (who bought from whom, via lineitem×orders). For PageRank the
 graph is made bidirectional (goods flow one way, payment flows
@@ -45,6 +52,7 @@ from cricket_analytics_nosql_spark.session import (
     ROWS_PER_TASK,
     fixed_plan,
     loop_partitions,
+    persisted_per_input,
 )
 from cricket_analytics_nosql_spark.sources.tables import load_table
 
@@ -265,7 +273,7 @@ def pagerank(
         )
     m = int(stats["m"])
     if m == 0 and seed_id is None:
-        return spark.createDataFrame([], "id long, pagerank double")
+        return spark.createDataFrame([], _rank_schema(edges, seed_id))
 
     d = float(damping)
     if m <= ROWS_PER_TASK:
@@ -281,6 +289,23 @@ def pagerank(
             edges, weight_col, seed_id, loop_parts, broadcast_max_vertices
         )
         return _power_loop(power, d, max_iter, tol, check_every)
+
+
+def _rank_schema(edges: DataFrame, seed_id) -> StructType:
+    """The Spark kernel's result schema, which every ``pagerank``
+    return shares: the id type its unions widen ``src``, ``dst`` (and
+    the seed) to, and a global rank that is never null."""
+    ids = edges.select(F.col("src").alias("id")).union(
+        edges.select(F.col("dst").alias("id"))
+    )
+    if seed_id is not None:
+        ids = ids.union(edges.select(F.lit(seed_id).alias("id")))
+    return StructType(
+        [
+            StructField("id", ids.schema["id"].dataType),
+            StructField("pagerank", DoubleType(), seed_id is not None),
+        ]
+    )
 
 
 def _power_loop(
@@ -358,19 +383,7 @@ class _DriverPower:
         # w/Σw(src) as the Spark kernel divides it: Σw is exact for
         # integer-valued weights, so both kernels hold the same p
         self.p = w / np.bincount(self.src, w, len(self.ids))[self.src]
-        # the Spark kernel's result schema: the id type its unions
-        # widen to, and a global rank that is never null
-        ids = edges.select(F.col("src").alias("id")).union(
-            edges.select(F.col("dst").alias("id"))
-        )
-        if seed_id is not None:
-            ids = ids.union(edges.select(F.lit(seed_id).alias("id")))
-        self.schema = StructType(
-            [
-                StructField("id", ids.schema["id"].dataType),
-                StructField("pagerank", DoubleType(), seed_id is not None),
-            ]
-        )
+        self.schema = _rank_schema(edges, seed_id)
         if seed_id is None:
             r, self.mass = np.ones(len(self.ids)), float(len(self.ids))
         else:
@@ -934,12 +947,32 @@ def player_vertices(deliveries: DataFrame) -> DataFrame:
     )
 
 
+@persisted_per_input
 def faced_edges(deliveries: DataFrame) -> DataFrame:
     """A9 last-writer-wins: MERGE (bat)-[f:FACED {matchId, innings,
     over, ball}]->(bow) SET f.runs/isWicket/team (neo4j_loader.py:
     58-68) — edge keyed by composite identity, payload from the last
     write. Reference defaults: ball→-1, runs→0 (neo4j_loader.py:
-    113-116, P12)."""
+    113-116, P12).
+
+    The projection is built once per input, the analogue of the GDS
+    named graph the reference loads once and queries many times
+    (``session.persisted_per_input``). Every call on a semantically
+    equal ``deliveries`` frame, such as a second
+    ``spark.read.parquet`` of the same warehouse, returns a frame over
+    the same cache entry. The first action that reads it pays the
+    warehouse scan and the dedup shuffle and fills the cache. Every
+    later Cypher statement, ``gds.pageRank`` call and graph write
+    reads the cached FACED set instead. The price is paid by an
+    anchored one-off statement in a fresh session, such as the duel
+    query: its ``src``/``dst`` filter is no longer pushed below the
+    dedup, so it dedups every delivery once to fill the cache.
+
+    Staleness: a warehouse overwritten through Spark and read again
+    yields the new rows, because a Spark write re-caches every cached
+    plan over its path. Files replaced outside Spark, by another
+    process or by hand, keep serving the cached edges until
+    ``spark.catalog.refreshByPath(path)``."""
     keyed = (
         deliveries.na.drop(subset=["batter", "bowler", "matchId", "over"])
         .select(

@@ -726,6 +726,15 @@ def compile_cypher(
 
     ``edges`` must have ``src``/``dst`` plus any relationship
     property columns; ``params`` supplies ``$name`` values (P17).
+
+    For the duel graph, pass ``operators.graph.faced_edges``: the
+    projection is built once per input and persisted, the analogue of
+    the GDS named graph the reference's statements run against. The
+    first statement that executes pays the full dedup of every
+    delivery and fills the cache, and every later statement reads the
+    cached FACED set. An anchored one-off statement, such as the duel
+    query, therefore no longer pushes its ``src``/``dst`` filter below
+    the dedup: it filters the cached projection.
     """
     params = params or {}
     m = _PAGERANK_RE.match(query)

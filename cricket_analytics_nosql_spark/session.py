@@ -10,14 +10,16 @@ Pandas-UDF slow path.
 from __future__ import annotations
 
 import atexit
+import functools
 import os
 import shutil
 import tempfile
 import zipfile
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -158,3 +160,45 @@ def fixed_plan(spark: SparkSession, n: int) -> Iterator[None]:
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+
+
+def persisted_per_input(
+    build: Callable[[DataFrame], DataFrame],
+) -> Callable[[DataFrame], DataFrame]:
+    """Decorator: ``build(src)``, persisted once per semantically
+    equal ``src`` — the package's one memo of derived frames.
+
+    Spark's cache is the memo: it matches plans by semantic equality
+    (``sameSemantics``), so two ``spark.read.parquet`` reads of one
+    path are one input. Each call returns a fresh frame and persists
+    it (MEMORY_AND_DISK, the DataFrame default: spillable, so safe at
+    scale) only when no equal plan is cached yet, so every equal
+    input shares one cache entry. Persisting is lazy: the first
+    action that reads the frame fills the cache.
+
+    - Persisting a plan the cache already holds makes Spark log
+      ``WARN CacheManager: Asked to cache already cached data``; the
+      check skips that.
+    - The frame is fresh on every call because a DataFrame object
+      keeps its first physical plan: one shared object, handed out
+      again after its input was rewritten through Spark, returned the
+      old rows or failed with ``FAILED_READ_FILE.FILE_NOT_EXIST``. A
+      fresh frame reads the re-cached data.
+    - The cache lives with the SparkContext: a stopped session takes
+      its entries with it, and an entry that was unpersisted or
+      cleared is persisted again.
+
+    Staleness is Spark's cache contract. A Spark write to a path
+    re-caches every cached plan that reads it, so an input rewritten
+    through Spark and read again yields the new rows. Files replaced
+    outside Spark keep serving the cached rows until
+    ``spark.catalog.refreshByPath``."""
+
+    @functools.wraps(build)
+    def persisted(src: DataFrame) -> DataFrame:
+        out = build(src)
+        if out.storageLevel == StorageLevel.NONE:
+            out.persist()
+        return out
+
+    return persisted

@@ -11,10 +11,13 @@ file quarantine.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.operators.cricket import (
     batter_vs_bowler,
@@ -414,3 +417,127 @@ def test_cricket_analytics_fixture_truths(spark):
     by_pair = {(r.a, r.b): r.co_appearances for r in pairs}
     for (a, b), n in by_pair.items():
         assert by_pair[(b, a)] == n
+
+
+# ---------------------------------------------------------------------------
+# the FACED projection: one persisted frame per warehouse
+# ---------------------------------------------------------------------------
+
+_DEDUP_KEY = {"matchId", "innings", "over", "ball", "src"}
+
+
+def test_faced_edges_is_one_cache_entry_per_warehouse(
+    spark, deliveries, tmp_path
+):
+    """Two separate reads of one warehouse path are one input, so they
+    get one persisted FACED projection, with the rows of the unpersisted
+    build."""
+    from cricket_analytics_nosql_spark.operators.graph import faced_edges
+
+    path = str(tmp_path / "deliveries.parquet")
+    deliveries.write.parquet(path)
+    first = faced_edges(spark.read.parquet(path))
+    second = faced_edges(spark.read.parquet(path))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    entries = [cache.lookupCachedData(df._jdf) for df in (first, second)]
+    assert all(e.isDefined() for e in entries)
+    assert entries[0].get().cachedRepresentation().cacheBuilder().equals(
+        entries[1].get().cachedRepresentation().cacheBuilder()
+    )
+    assert first.storageLevel.useMemory and first.storageLevel.useDisk
+    built = faced_edges.__wrapped__(spark.read.parquet(path))
+    assert sorted(second.collect()) == sorted(built.collect())
+
+
+def test_faced_edges_sees_a_warehouse_rewritten_through_spark(
+    spark, deliveries, tmp_path
+):
+    """A Spark write re-caches every cached plan over its path, so a
+    warehouse overwritten through Spark and read again yields the new
+    rows."""
+    from cricket_analytics_nosql_spark.operators.graph import faced_edges
+
+    path = str(tmp_path / "deliveries.parquet")
+    deliveries.write.parquet(path)
+    old = faced_edges(spark.read.parquet(path)).collect()
+    first_innings = deliveries.filter(F.col("innings") == "1")
+    first_innings.write.mode("overwrite").parquet(path)
+    new = faced_edges(spark.read.parquet(path)).collect()
+    want = faced_edges(first_innings).collect()
+    assert sorted(new) == sorted(want)
+    assert len(new) < len(old)
+
+
+def _sql_executions(spark) -> set:
+    store = spark._jsparkSession.sharedState().statusStore()
+    xs = store.executionsList()
+    return {xs.apply(i).executionId() for i in range(xs.size())}
+
+
+def _dedup_exchange_runs(spark, since: set) -> int:
+    """SQL executions, other than ``since``, that shuffled rows
+    through ``faced_edges``' MERGE-key dedup. A plan that reads the
+    cached projection still lists the exchange under its cached
+    relation, but writes no rows through it."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    runs = 0
+    for eid in _sql_executions(spark) - since:
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        wrote = 0
+        for node in (nodes.apply(i) for i in range(nodes.size())):
+            if node.name() != "Exchange":
+                continue
+            if set(re.findall(r"(\w+)#", node.desc())) != _DEDUP_KEY:
+                continue
+            metrics = node.metrics()
+            for m in (metrics.apply(j) for j in range(metrics.size())):
+                v = values.get(m.accumulatorId())
+                if m.name() == "shuffle records written" and v.isDefined():
+                    wrote += int(v.get().replace(",", ""))
+        runs += wrote > 0
+    return runs
+
+
+@contextlib.contextmanager
+def _jvm_log(spark):
+    """The JVM's log messages, at the session's log level, while the
+    scope runs."""
+    jvm = spark._jvm
+    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    text = jvm.java.io.StringWriter()
+    appender = jvm.org.apache.logging.log4j.core.appender.WriterAppender
+    capture = appender.createAppender(None, None, text, "capture", False, True)
+    capture.start()
+    root.addAppender(capture, None, None)
+    ctx.updateLoggers()
+    try:
+        yield text
+    finally:
+        root.removeAppender("capture")
+        ctx.updateLoggers()
+        capture.stop()
+
+
+def test_cli_graph_dedups_the_deliveries_once(spark, tmp_path, capsys):
+    """CLI ``graph`` writes the FACED edges and runs PageRank over them
+    from one dedup of the deliveries, also when the caller projected
+    the same warehouse first, and the cache logs no warning."""
+    from cricket_analytics_nosql_spark.cli import main
+    from cricket_analytics_nosql_spark.operators.graph import faced_edges
+    from cricket_analytics_nosql_spark.sources.cricket_fixtures import (
+        write_demo_dir,
+    )
+
+    wh = str(tmp_path / "wh")
+    assert main(["etl", "--data-dir", write_demo_dir(), "--out", wh]) == 0
+    since = _sql_executions(spark)
+    with _jvm_log(spark) as log:
+        faced_edges(spark.read.parquet(os.path.join(wh, "deliveries.parquet")))
+        assert main(["graph", "--warehouse", wh]) == 0
+    assert "PageRank top hubs" in capsys.readouterr().out
+    assert _dedup_exchange_runs(spark, since) == 1
+    assert "Asked to cache already cached data" not in log.toString()

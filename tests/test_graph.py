@@ -65,6 +65,19 @@ def test_pagerank_empty(spark):
     assert pagerank(_edges(spark, [])).count() == 0
 
 
+@pytest.mark.parametrize(
+    "id_type, edge", [("string", ("A", "B")), ("long", (1, 2))]
+)
+def test_empty_pagerank_schema_matches_a_nonempty_call(spark, id_type, edge):
+    """An empty edge list returns the schema a non-empty one of the
+    same id type returns: its id type and a non-null global rank."""
+    schema = f"src {id_type}, dst {id_type}"
+    empty = pagerank(spark.createDataFrame([], schema))
+    nonempty = pagerank(spark.createDataFrame([edge], schema))
+    assert empty.schema == nonempty.schema
+    assert empty.collect() == []
+
+
 @pytest.fixture
 def spark_loop(monkeypatch):
     """Send every edge list through ``pagerank``'s Spark kernel: the
