@@ -252,7 +252,10 @@ def cmd_cypher(args: argparse.Namespace) -> int:
     deliveries = spark.read.parquet(
         os.path.join(args.warehouse, "deliveries.parquet")
     )
-    edges = faced_edges(deliveries)
+    # One statement per process: the persisted projection would have
+    # no second reader, and filling it costs the whole dedup plus the
+    # statement's src/dst pushdown below it.
+    edges = faced_edges.__wrapped__(deliveries)
     _show("cypher", compile_cypher(query, edges, params), explain=args.explain)
     return 0
 

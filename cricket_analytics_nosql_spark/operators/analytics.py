@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.functions.scalar import cents, dollars, epoch_day, flag, revenue_cents
 from cricket_analytics_nosql_spark.operators.spec import QuerySpec
+from cricket_analytics_nosql_spark.session import local_frame
 from cricket_analytics_nosql_spark.sources.tables import load_table
 
 
@@ -2358,7 +2359,8 @@ def kaplan_meier_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cum_d", F.sum("d_t").over(wt))
         .withColumn("cum_c", F.sum("c_t").over(wt))
     )
-    horizons = spark.createDataFrame(
+    horizons = local_frame(
+        spark,
         [(h,) for h in KM_HORIZONS], "horizon_days long"
     )
     return (

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.operators.spec import QuerySpec
+from cricket_analytics_nosql_spark.session import local_frame
 from cricket_analytics_nosql_spark.sources.tables import load_table
 
 END = "</w>"
@@ -79,7 +80,8 @@ def bpe_train(
     artifact a tokenizer ships.  Ties on count break lexicographically
     on (left, right) so training is deterministic across engines,
     partitionings, and runs."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         _train_merges(docs, n_merges),
         "merge_rank int, left string, right string,"
         " merged string, weighted_count bigint",

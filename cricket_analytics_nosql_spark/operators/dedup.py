@@ -42,6 +42,7 @@ from cricket_analytics_nosql_spark.operators.text import (
 )
 from cricket_analytics_nosql_spark.session import (
     fixed_plan,
+    local_frame,
     loop_partitions,
     persisted_per_input,
 )
@@ -1178,7 +1179,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
     )
     ok = (hits / n_truth >= SIMHASH_RECALL_FLOOR) if n_truth else True
-    flags = spark.createDataFrame([(ok,)], "recall_ok boolean")
+    flags = local_frame(spark, [(ok,)], "recall_ok boolean")
     return flags.crossJoin(F.broadcast(stats)).select(
         F.lit(n_truth).cast("long").alias("n_truth_pairs"),
         "avg_truth_jaccard",

@@ -51,6 +51,7 @@ from cricket_analytics_nosql_spark.operators.spec import QuerySpec
 from cricket_analytics_nosql_spark.session import (
     ROWS_PER_TASK,
     fixed_plan,
+    local_frame,
     loop_partitions,
     persisted_per_input,
 )
@@ -273,7 +274,7 @@ def pagerank(
         )
     m = int(stats["m"])
     if m == 0 and seed_id is None:
-        return spark.createDataFrame([], _rank_schema(edges, seed_id))
+        return local_frame(spark, [], _rank_schema(edges, seed_id))
 
     d = float(damping)
     if m <= ROWS_PER_TASK:
@@ -410,7 +411,7 @@ class _DriverPower:
                 ids = np.append(ids, self.seed_id)
                 ranks = np.append(ranks, base)
         table = pa.table({"id": ids, "pagerank": ranks})
-        return self.spark.createDataFrame(table, self.schema)
+        return local_frame(self.spark, table, self.schema)
 
 
 class _SparkPower:

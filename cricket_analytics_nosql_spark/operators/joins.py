@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.functions.scalar import cents, dollars, epoch_day
 from cricket_analytics_nosql_spark.operators.spec import QuerySpec
+from cricket_analytics_nosql_spark.session import local_frame
 from cricket_analytics_nosql_spark.sources.tables import load_table
 
 
@@ -335,7 +336,8 @@ def range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     small literal band table via BETWEEN — broadcast nested-loop on a
     tiny side, which is the right physical plan for band tables."""
     ev = load_table(spark, sf_dir, "events")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("low", 0.0, 50.0), ("mid", 50.0, 150.0), ("high", 150.0, 1e9)],
         "band string, lo double, hi double",
     )
@@ -378,7 +380,8 @@ def null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None),
     ).otherwise(F.col("event_type"))
     left = ev.select(masked.alias("k"))
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [("click", "C"), ("purchase", "P"), (None, "UNKNOWN")],
         "k string, label string",
     )

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cricket_analytics_nosql_spark.operators.spec import QuerySpec
+from cricket_analytics_nosql_spark.session import local_frame
 from cricket_analytics_nosql_spark.sources.tables import load_table
 
 HAVE_PIL = False
@@ -413,7 +414,8 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     caught = truth.join(
         phash_near_dup_pairs(spark, sf_dir), ["doc_a", "doc_b"], "left_semi"
     ).count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_docs, n_truth, caught == n_truth)],
         "n_docs long, n_exact_dup_pairs long, all_exact_dups_caught boolean",
     )

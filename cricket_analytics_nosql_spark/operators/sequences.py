@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.functions.scalar import cents, dollars, epoch_day, flag
 from cricket_analytics_nosql_spark.operators.spec import QuerySpec
+from cricket_analytics_nosql_spark.session import local_frame
 from cricket_analytics_nosql_spark.sources.tables import load_table
 
 def _day(col: str) -> F.Column:
@@ -1518,7 +1519,8 @@ def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s")
         .agg(F.sum(F.coalesce(F.col("n"), F.lit(0))).alias("v"))
     )
-    coefs = spark.createDataFrame(
+    coefs = local_frame(
+        spark,
         _SHAPLEY_COEFS, "bit INT, s INT, w INT"
     )
     scored = (

@@ -33,13 +33,17 @@ import functools
 import math
 
 import numpy as np
-
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.functions.scalar import flag
 from cricket_analytics_nosql_spark.operators.spec import QuerySpec
-from cricket_analytics_nosql_spark.session import loop_partitions
+from cricket_analytics_nosql_spark.session import (
+    ROWS_PER_TASK,
+    local_frame,
+    loop_partitions,
+)
 from cricket_analytics_nosql_spark.sources.tables import fan_out, load_table
 
 N_QUERIES = 8  # vec_id < 8 is the demo query set
@@ -614,7 +618,8 @@ def _centroid_frame(
     """(cell, centroid) DataFrame view of driver-side centroids, for
     consumers that join/broadcast the centroid table (probe ranking,
     radii). k rows of metadata — never data-sized."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(c), [float(x) for x in v]) for c, v in cents],
         "cell int, centroid array<double>",
     )
@@ -640,7 +645,8 @@ def _book_frame(
     of (cell, centroid, n2 = ‖c‖²) structs sorted by cell — for the
     broadcast form of the cell assignment. ‖c‖² is folded in Python
     left to right, the same order as the literal form's."""
-    book = emb.sparkSession.createDataFrame(
+    book = local_frame(
+        emb.sparkSession,
         [
             (
                 [
@@ -1030,7 +1036,8 @@ def ivf_topk(
                 (int(q_id), [float(x) for x in qv], int(cell))
                 for _, cell in scored
             )
-        probes = emb.sparkSession.createDataFrame(
+        probes = local_frame(
+            emb.sparkSession,
             probe_rows, "q_id long, q array<double>, cell int"
         )
     else:
@@ -1262,7 +1269,8 @@ def _ann_method_audit(
     stats = obs.get
     n_exact = int(stats["n"])
     hits = neigh.join(exact, ["q_id", "vec_id"], "left_semi").count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 N_QUERIES,
@@ -1521,7 +1529,8 @@ def pq_codebooks(
     codebook table; ``ann_pq`` itself uses the rows form directly —
     its ADC lookup tables are driver-side literals)."""
     books = pq_codebooks_rows(emb, m=m, k=k, iters=iters, dim=dim)
-    return emb.sparkSession.createDataFrame(
+    return local_frame(
+        emb.sparkSession,
         [
             (j, int(c), [float(x) for x in v])
             for j in sorted(books)
@@ -1679,7 +1688,8 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = obs.get
     n_exact = int(stats["n"])
     hits = approx.join(exact, ["q_id", "vec_id"], "left_semi").count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 N_QUERIES,
@@ -1787,6 +1797,48 @@ ORDER BY t.label, t.rank
 """
 
 
+# Entries of one GEMM slice in ``_block_pairs`` (32 MB of float64):
+# the block is computed this many cosines at a time, so its memory is
+# bounded whatever the cell sizes.
+BLOCK_SLICE_ENTRIES = 1 << 22
+
+
+def _block_pairs(
+    a_ids: np.ndarray,
+    a_mat: np.ndarray,
+    b_ids: np.ndarray,
+    b_mat: np.ndarray,
+    same_cell: bool,
+    pre_tau: float,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The candidate pairs of one cell-pair block: every (a, b) whose
+    GEMM cosine is ≥ ``pre_tau``, as ``(lo, hi)`` id arrays with
+    lo = min and hi = max of the two ids. ``a_mat``/``b_mat`` hold one
+    vector per row of ``a_ids``/``b_ids``. A diagonal block
+    (``same_cell``: both sides are the same cell's members) keeps each
+    pair once, by id order; the sides of an off-diagonal block are
+    disjoint, so every hit is a distinct pair. A zero-norm vector has
+    no direction: its cosines are NaN and never a hit. Pure numpy —
+    ``exact_cosine_pairs`` runs it on the driver or in a grouped
+    pandas task."""
+    with np.errstate(invalid="ignore", divide="ignore"):
+        a_n = a_mat / np.linalg.norm(a_mat, axis=1, keepdims=True)
+        b_n = a_n if same_cell else (
+            b_mat / np.linalg.norm(b_mat, axis=1, keepdims=True)
+        )
+        step = max(1, BLOCK_SLICE_ENTRIES // max(1, len(b_ids)))
+        lo, hi = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+        for i in range(0, len(a_ids), step):
+            a = a_ids[i : i + step]
+            hit = a_n[i : i + step] @ b_n.T >= pre_tau
+            if same_cell:
+                hit &= a[:, None] < b_ids[None, :]
+            ii, jj = np.nonzero(hit)
+            lo.append(np.minimum(a[ii], b_ids[jj]))
+            hi.append(np.maximum(a[ii], b_ids[jj]))
+    return np.concatenate(lo), np.concatenate(hi)
+
+
 def exact_cosine_pairs(
     emb: DataFrame,
     tau: float,
@@ -1807,10 +1859,9 @@ def exact_cosine_pairs(
     angles. Radii ride the assignment checkpoint job as an
     Observation (round 12 — ``_assign_with_radii``; no separate
     radii pass), the surviving-cell-pair prune is driver-side float
-    math over k centroids + k radii, and vectors replicate into
-    their blocks through ONE broadcast role-table equi-join — never
-    a Cartesian node. Candidates are re-checked with the exact
-    cosine, so the output set is identical to the all-pairs baseline
+    math over k centroids + k radii, and blocks are formed per
+    surviving cell pair — never a Cartesian node. Candidates are
+    re-checked with the exact cosine, so the output set is identical to the all-pairs baseline
     for ANY centroid quality.
 
     Why not SRP-LSH here: at a τ this far below 1 (the per-hyperplane
@@ -1825,16 +1876,31 @@ def exact_cosine_pairs(
     exact semantics — with per-task memory bounded by cell size, not
     corpus size.
 
-    The per-block inner kernel is a numpy GEMM under applyInPandas
-    (round 9): each surviving unordered cell pair becomes one group
-    holding both cells' vectors, the group computes its full cosine
-    block as one normalized matrix product, and candidates within
-    ε=1e-6 of τ come back as (v1, v2) id pairs only. (A round-11
-    batch-segmented mapInArrow twin was measured IDENTICAL on the
-    sf0.1 blocked-all-pairs worst case — 136 groups, 0.8-0.9 s
-    stage either way on warm workers — so the simpler grouped form
-    stays.) EXACTNESS is
-    preserved by construction: the GEMM is a prefilter whose band
+    The per-block inner kernel is ONE numpy GEMM, ``_block_pairs``:
+    each surviving unordered cell pair is one block holding both
+    cells' vectors, the block's cosines come from one normalized
+    matrix product, and candidates within ε=1e-6 of τ come back as
+    (v1, v2) id pairs only. Where it runs is chosen from the MEASURED
+    replicated-row count ``sides_rows`` (Σ |cell|·blocks(cell), exact
+    from the assignment job's Observation), by the rule
+    ``graph.pagerank`` uses for its power rounds:
+
+    - ``sides_rows ≤ session.ROWS_PER_TASK``: on the driver. The
+      assignment checkpoint (vec_id, cell, v) is collected once as
+      Arrow and every block runs in process; the candidates become a
+      ``local_frame``. No block exchange, no grouped pandas stage, no
+      candidate checkpoint job, and no Python worker starts. Driver
+      memory at the bound is the vectors, ≈ 150k × 64 × 8 B = 77 MB,
+      plus one GEMM slice (``BLOCK_SLICE_ENTRIES``).
+    - above it: in Python workers, one ``applyInPandas`` group per
+      block over a keyed exchange sized by ``loop_partitions``, so
+      per-task memory is one cell pair's vectors. (A batch-segmented
+      mapInArrow twin measured identical on the sf0.1 blocked
+      all-pairs worst case — 136 groups, 0.8-0.9 s stage either way
+      on warm workers — so the simpler grouped form stays.)
+
+    EXACTNESS is preserved by construction in both placements: the
+    GEMM is a prefilter whose band
     covers any summation-order divergence from the JVM fold (~1e-14
     for unit-norm 64-dim vectors, band 1e-6), and every survivor is
     re-verified on the JVM with ``cos6`` over the norms checkpointed
@@ -1907,86 +1973,98 @@ def exact_cosine_pairs(
         ]
     # replicate each vector into every block it participates in:
     # side 0 = the c1 cell, side 1 = the c2 cell (diagonal blocks
-    # need only side 0 — both roles are the same set). The role
-    # table is cell-keyed (k rows, ≤2k roles each) and broadcast, so
-    # the replication is ONE pass over the assigned corpus — the old
-    # two-branch union scanned it once per side.
+    # need only side 0 — both roles are the same set).
     roles: dict[int, list[tuple[int, int, int]]] = {}
     for c1v, c2v in cand:
         roles.setdefault(c1v, []).append((c1v, c2v, 0))
         if c2v != c1v:
             roles.setdefault(c2v, []).append((c1v, c2v, 1))
-    roles_df = emb.sparkSession.createDataFrame(
-        [(c, rs) for c, rs in sorted(roles.items())],
-        "cell int, rs array<struct<c1:int,c2:int,side:int>>",
-    )
-    sides = (
-        assigned.join(F.broadcast(roles_df), "cell")
-        .select("vec_id", "v", F.explode("rs").alias("r"))
-        .select(
-            F.col("r.c1").alias("c1"),
-            F.col("r.c2").alias("c2"),
-            "vec_id",
-            "v",
-            F.col("r.side").alias("side"),
-        )
-    )
-    pre_tau = tau - 1e-6  # covers fold-vs-GEMM ulps AND round(·, 6)
-
-    def _gemm_block(key, pdf):
-        import numpy as np
-        import pandas as pd
-
-        a_rows = pdf[pdf["side"] == 0]
-        b_rows = a_rows if key[0] == key[1] else pdf[pdf["side"] == 1]
-        empty = pd.DataFrame({
-            "v1": pd.Series(dtype="int64"),
-            "v2": pd.Series(dtype="int64"),
-        })
-        if a_rows.empty or b_rows.empty:
-            return empty
-        a_ids = a_rows["vec_id"].to_numpy()
-        b_ids = b_rows["vec_id"].to_numpy()
-        a_mat = np.stack(a_rows["v"].to_numpy())
-        a_n = a_mat / np.linalg.norm(a_mat, axis=1, keepdims=True)
-        if key[0] == key[1]:
-            b_n = a_n
-        else:
-            b_mat = np.stack(b_rows["v"].to_numpy())
-            b_n = b_mat / np.linalg.norm(b_mat, axis=1, keepdims=True)
-        block = a_n @ b_n.T
-        if key[0] == key[1]:
-            # same set on both axes: id order keeps each pair once
-            hit = (block >= pre_tau) & (a_ids[:, None] < b_ids[None, :])
-        else:
-            # disjoint sets: every hit is a distinct unordered pair
-            hit = block >= pre_tau
-        ii, jj = np.nonzero(hit)
-        if ii.size == 0:
-            return empty
-        lo = np.minimum(a_ids[ii], b_ids[jj])
-        hi = np.maximum(a_ids[ii], b_ids[jj])
-        return pd.DataFrame({"v1": lo, "v2": hi})
-
-    # The block exchange is an explicit keyed repartition sized from
-    # the MEASURED replicated-row count (Σ |cell|·roles(cell), exact
-    # from the assignment job's Observation) — the CC/pagerank
-    # ``loop_partitions`` sizing; the grouped GEMM then reads it in
-    # place. Inherited session sizing ran this KB-scale exchange
-    # through 32 tasks at bench scale — measured 3.15 → 2.6 s for the
-    # pipeline at sf0.1 — and at cluster scale the same formula keeps
-    # block tasks in-memory. The checkpoint is pair-sized (the
-    # near-dup band), and the re-verify broadcast below reads it
-    # materialized.
+    # the replicated-row count Σ |cell|·roles(cell), exact from the
+    # assignment job's Observation: it places the block kernel and
+    # sizes the block exchange
     sides_rows = sum(
         sizes.get(c, 0) * len(rs) for c, rs in roles.items()
     )
-    cand_pairs = (
-        sides.repartition(loop_partitions(sides_rows), "c1", "c2")
-        .groupBy("c1", "c2")
-        .applyInPandas(_gemm_block, "v1 long, v2 long")
-        .localCheckpoint()
-    )
+    pre_tau = tau - 1e-6  # covers fold-vs-GEMM ulps AND round(·, 6)
+    if sides_rows <= ROWS_PER_TASK:
+        # Every live cell has its diagonal block, so ``assigned`` is
+        # at most ``sides_rows`` rows: collect it once and run every
+        # block on the driver.
+        t = assigned.select("vec_id", "cell", "v").toArrow()
+        ids = t["vec_id"].to_numpy()
+        vecs = t["v"].to_numpy(zero_copy_only=False)
+        cell_of = t["cell"].to_numpy()
+        members = {}
+        for c in roles:
+            at = np.flatnonzero(cell_of == c)
+            members[c] = (ids[at], np.stack(vecs[at]))
+        v1, v2 = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+        for c1v, c2v in cand:
+            lo, hi = _block_pairs(
+                *members[c1v], *members[c2v], c1v == c2v, pre_tau
+            )
+            v1.append(lo)
+            v2.append(hi)
+        cand_pairs = local_frame(
+            emb.sparkSession,
+            pa.table({"v1": np.concatenate(v1), "v2": np.concatenate(v2)}),
+            "v1 long, v2 long",
+        )
+    else:
+        # The role table is cell-keyed (k rows, ≤2k roles each) and
+        # broadcast, so the replication is ONE pass over the assigned
+        # corpus.
+        roles_df = local_frame(
+            emb.sparkSession,
+            sorted(roles.items()),
+            "cell int, rs array<struct<c1:int,c2:int,side:int>>",
+        )
+        sides = (
+            assigned.join(F.broadcast(roles_df), "cell")
+            .select("vec_id", "v", F.explode("rs").alias("r"))
+            .select(
+                F.col("r.c1").alias("c1"),
+                F.col("r.c2").alias("c2"),
+                "vec_id",
+                "v",
+                F.col("r.side").alias("side"),
+            )
+        )
+
+        def _gemm_block(key, pdf):
+            import pandas as pd
+
+            a_rows = pdf[pdf["side"] == 0]
+            b_rows = a_rows if key[0] == key[1] else pdf[pdf["side"] == 1]
+            lo = hi = np.empty(0, np.int64)
+            if not (a_rows.empty or b_rows.empty):
+                a_mat = np.stack(a_rows["v"].to_numpy())
+                b_mat = (
+                    a_mat if key[0] == key[1]
+                    else np.stack(b_rows["v"].to_numpy())
+                )
+                lo, hi = _block_pairs(
+                    a_rows["vec_id"].to_numpy(), a_mat,
+                    b_rows["vec_id"].to_numpy(), b_mat,
+                    key[0] == key[1], pre_tau,
+                )
+            return pd.DataFrame({"v1": lo, "v2": hi})
+
+        # The block exchange is an explicit keyed repartition sized
+        # from ``sides_rows`` — the CC/pagerank ``loop_partitions``
+        # sizing; the grouped GEMM then reads it in place. Inherited
+        # session sizing ran this KB-scale exchange through 32 tasks
+        # at bench scale (measured 3.15 → 2.6 s for the pipeline at
+        # sf0.1), and at cluster scale the same formula keeps block
+        # tasks in-memory.
+        # The checkpoint is pair-sized (the near-dup band), and the
+        # re-verify broadcast below reads it materialized.
+        cand_pairs = (
+            sides.repartition(loop_partitions(sides_rows), "c1", "c2")
+            .groupBy("c1", "c2")
+            .applyInPandas(_gemm_block, "v1 long, v2 long")
+            .localCheckpoint()
+        )
     # exact re-verify of the (near-dup-sized) survivor band with
     # ``cos6``: pair frame broadcasts, corpus streams. Both probes
     # read the assignment CHECKPOINT — vec_id, v and the ‖v‖ it
@@ -2709,7 +2787,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         approx = fn(spark, sf_dir).select("q_id", "vec_id")
         hits = approx.join(exact, ["q_id", "vec_id"], "left_semi").count()
         rows.append((method, hits / n_exact >= RECALL_FLOORS[method]))
-    flags = spark.createDataFrame(rows, "method string, recall_ok boolean")
+    flags = local_frame(spark, rows, "method string, recall_ok boolean")
     return (
         flags.crossJoin(F.broadcast(top1))
         .select("method", F.lit(n_exact).cast("long").alias("n_exact_pairs"),

@@ -105,9 +105,22 @@ def dpp_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(tempfile.mkdtemp(prefix="dpp_"), "events_by_type")
     write_partitioned(ev, out, "event_type")
     fact = spark.read.parquet(out)
-    dim = spark.createDataFrame(
-        FUNNEL_STAGES, "event_type string, stage string"
-    ).filter(F.col("stage") == "engagement")
+    # The dimension is built JVM-side, not as a ``local_frame``: the
+    # optimizer folds a filter over a LocalRelation into the relation
+    # (ConvertToLocalRelation), and with no filter left on the
+    # dimension Catalyst plants no dynamicpruning subquery.
+    dim = (
+        spark.range(1)
+        .select(
+            F.inline(
+                F.array(*(
+                    F.struct(F.lit(t).alias("event_type"), F.lit(s).alias("stage"))
+                    for t, s in FUNNEL_STAGES
+                ))
+            )
+        )
+        .filter(F.col("stage") == "engagement")
+    )
     return (
         fact.join(dim, "event_type")
         .groupBy("event_type")

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.functions.scalar import md5_u32
 from cricket_analytics_nosql_spark.operators.spec import QuerySpec
+from cricket_analytics_nosql_spark.session import local_frame
 from cricket_analytics_nosql_spark.sources.tables import load_table
 
 HH_K = 2000  # heavy-hitter threshold denominator: freq > n/K
@@ -392,7 +393,7 @@ def quantile_sketch_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("c").over(Window.partitionBy(F.lit(0))).alias("n"),
         )
     )
-    qf = spark.createDataFrame([(q,) for q in QSKETCH_QS], "q double")
+    qf = local_frame(spark, [(q,) for q in QSKETCH_QS], "q double")
     approx = (
         qf.join(
             F.broadcast(cum),

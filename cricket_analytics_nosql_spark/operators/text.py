@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.functions.scalar import flag, md5_u32
 from cricket_analytics_nosql_spark.operators.spec import QuerySpec
+from cricket_analytics_nosql_spark.session import local_frame
 from cricket_analytics_nosql_spark.sources.tables import fan_out, load_table
 
 # Small closed-class English word list for the stopword-ratio features.
@@ -2087,7 +2088,8 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").over(whole).alias("total"),
         F.count(F.lit(1)).over(whole).alias("n_terms"),
     )
-    targets = spark.createDataFrame(
+    targets = local_frame(
+        spark,
         [(t,) for t in VOCAB_COVERAGE_TARGETS], "pm long"
     )
     j = ranked.crossJoin(F.broadcast(targets))
@@ -3363,7 +3365,8 @@ def pr_curve_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("nn").over(w_desc).alias("cum_fp"),
         F.sum("np").over(w_all).alias("n_pos"),
     )
-    targets = spark.createDataFrame(
+    targets = local_frame(
+        spark,
         [(t,) for t in PR_RECALL_TARGETS_PM], "pm long"
     )
     qualified = cum.crossJoin(F.broadcast(targets)).filter(

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.operators.spec import QuerySpec
+from cricket_analytics_nosql_spark.session import local_frame
 from cricket_analytics_nosql_spark.sources.tables import load_table
 
 # --------------------------------------------------------------------------
@@ -1163,7 +1164,8 @@ def logreg_quality_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         w1 -= LOGREG_LR * r["g1"]
         w2 -= LOGREG_LR * r["g2"]
         b, w1, w2 = float(b), float(w1), float(w2)
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         rows, "iter int, loss double, b double, w1 double, w2 double"
     )
     return out.select(

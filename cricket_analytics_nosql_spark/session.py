@@ -15,11 +15,14 @@ import os
 import shutil
 import tempfile
 import zipfile
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from contextlib import contextmanager
 
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -38,19 +41,31 @@ def get_spark(
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    runtime = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+    }
+    spark = SparkSession._instantiatedSession
+    if spark is not None and spark._sc._jsc is not None:
+        # A running session: its static configs (master, driver
+        # memory, UI) are fixed, and handing them to the builder again
+        # only makes it log "Using an existing Spark session; only
+        # runtime SQL configurations will take effect".
+        for key, value in runtime.items():
+            spark.conf.set(key, value)
+    else:
+        spark = (
+            SparkSession.builder.master(f"local[{cpus}]")
+            .appName(app_name)
+            .config(map=runtime)
+            .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+            .config("spark.ui.enabled", "false")
+            .getOrCreate()
+        )
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
     return spark
@@ -114,6 +129,35 @@ def _ship_package(spark: SparkSession) -> None:
                     full = os.path.join(d, f)
                     zf.write(full, os.path.relpath(full, root))
     sc.addPyFile(path)
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[tuple] | pa.Table,
+    schema: str | StructType,
+) -> DataFrame:
+    """A DataFrame over driver-side rows, planned as a
+    ``LocalRelation``: the package's one way to turn driver values
+    (literal tables, audit rows, numpy results) into a frame.
+
+    ``rows`` are tuples in ``schema`` order, or a ready
+    ``pyarrow.Table``; ``schema`` is a DDL string or a ``StructType``.
+
+    Why not ``spark.createDataFrame(rows, ddl)`` on a list: PySpark
+    4.1 plans a list as a ``LogicalRDD`` over a Python RDD, and the
+    first action on it starts the Python worker daemon and its
+    workers, about 380 MB of resident memory on the corpus benchmark,
+    to serialize a handful of rows. An Arrow table crosses to the JVM
+    once and is planned as a ``LocalRelation``: no Python process
+    starts, and the optimizer sees the rows and their exact size."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not isinstance(rows, pa.Table):
+        arrow = to_arrow_schema(schema)
+        rows = pa.Table.from_pylist(
+            [dict(zip(arrow.names, r)) for r in rows], schema=arrow
+        )
+    return spark.createDataFrame(rows, schema)
 
 
 # The row budget of one loop task: iterative loops size their

@@ -11,6 +11,7 @@ import re
 
 import pytest
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.operators.cricket import (
@@ -230,8 +231,11 @@ def test_cypher_order_of_clauses_and_params(spark, edges):
 
 def test_cli_cypher_subcommand(spark, tmp_path):
     """CLI: etl a warehouse, then run a reference-shaped Cypher
-    statement against its duel graph with a bound parameter."""
+    statement against its duel graph with a bound parameter. The
+    statement is the process's only one, so it persists nothing: the
+    FACED projection is read without filling the cache."""
     from cricket_analytics_nosql_spark.cli import main
+    from cricket_analytics_nosql_spark.operators.graph import faced_edges
     from cricket_analytics_nosql_spark.sources.cricket_fixtures import (
         write_demo_dir,
     )
@@ -242,10 +246,14 @@ def test_cli_cypher_subcommand(spark, tmp_path):
         "MATCH (bat:Player {name:$batter})-[r:FACED]->(bow:Player) "
         "RETURN count(r) AS balls, sum(r.runs) AS runs"
     )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert main(
         ["cypher", "--warehouse", wh, "--query", q,
          "--param", "batter=V Kohli"]
     ) == 0
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    deliveries = spark.read.parquet(f"{wh}/deliveries.parquet")
+    assert faced_edges.__wrapped__(deliveries).storageLevel == StorageLevel.NONE
 
 
 def test_unaliased_dotted_items_roundtrip(spark, edges):

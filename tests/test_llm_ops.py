@@ -424,6 +424,77 @@ def test_exact_cosine_pairs_zero_norm_centroid(spark):
     assert len(want) > 200  # pairs inside the zero centroid's cell
 
 
+@pytest.fixture
+def gemm_in_workers(monkeypatch):
+    """Send every block of ``exact_cosine_pairs`` to the grouped
+    pandas placement: the driver gate drops to -1, below any
+    replicated-row count, so the empty corpus takes it too."""
+    from cricket_analytics_nosql_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "ROWS_PER_TASK", -1)
+
+
+def _block_case(spark, sf_small, case):
+    """(embeddings, exact_cosine_pairs kwargs) for one placement case."""
+    import numpy as np
+
+    from cricket_analytics_nosql_spark.operators.similarity import (
+        COS_TAU,
+        _doubles,
+    )
+
+    if case == "sf0.001":
+        emb = _doubles(load_table(spark, sf_small, "embeddings"))
+        return emb, {"tau": COS_TAU}
+    schema = "vec_id long, v array<double>"
+    rng = np.random.RandomState(5)
+    if case == "empty":
+        return spark.createDataFrame([], schema), {"tau": 0.9, "k": 3, "dim": 8}
+    if case == "single_member_cells":
+        vecs = [
+            [1.0, 0.0, 0.0, 0.0], [0.95, 0.05, 0.0, 0.0],
+            [0.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0],
+        ]
+        cents = spark.createDataFrame(
+            list(enumerate(vecs)), "cell int, centroid array<double>"
+        )
+        emb = spark.createDataFrame(list(enumerate(vecs)), schema)
+        return emb, {"tau": 0.9, "centroids": cents, "dim": 4}
+    anchors = rng.randn(3, 8) * 4
+    vecs = [(a + rng.randn(8) * 0.3).tolist() for a in anchors for _ in range(15)]
+    if case == "zero_norm":
+        vecs.append([0.0] * 8)
+    else:  # duplicates: every fifth vector again, under a new id
+        vecs += vecs[::5]
+    emb = spark.createDataFrame(list(enumerate(vecs)), schema)
+    return emb, {"tau": 0.9, "k": 3, "dim": 8}
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["sf0.001", "zero_norm", "duplicates", "single_member_cells", "empty"],
+)
+def test_exact_cosine_pairs_same_on_driver_and_in_workers(
+    spark, sf_small, request, case
+):
+    """The two placements of the block kernel (``_block_pairs`` on
+    the driver up to ``ROWS_PER_TASK`` replicated rows, in grouped
+    pandas tasks above) return the same pairs and cosines."""
+    from cricket_analytics_nosql_spark.operators.similarity import (
+        exact_cosine_pairs,
+    )
+
+    emb, kw = _block_case(spark, sf_small, case)
+
+    def pairs():
+        return sorted(tuple(r) for r in exact_cosine_pairs(emb, **kw).collect())
+
+    on_driver = pairs()
+    request.getfixturevalue("gemm_in_workers")
+    assert pairs() == on_driver
+    assert bool(on_driver) == (case != "empty")
+
+
 def test_exact_cosine_pairs_compiles_without_codegen_fallback(spark, sf_small):
     """The re-verify join must fit whole-stage codegen's 64 KB method
     limit: the filter on ``cos`` is pushed into the broadcast join
