@@ -29,7 +29,7 @@ from __future__ import annotations
 import functools
 import operator
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cricket_analytics_nosql_spark.functions.scalar import md5_u32
@@ -40,10 +40,12 @@ from cricket_analytics_nosql_spark.operators.text import (
     shingles_col,
     tokens_col,
 )
+from cricket_analytics_nosql_spark.operators.graph import (
+    _min_label_step,
+    _supersteps,
+)
 from cricket_analytics_nosql_spark.session import (
-    fixed_plan,
     local_frame,
-    loop_partitions,
     persisted_per_input,
 )
 from cricket_analytics_nosql_spark.sources.tables import fan_out, load_table
@@ -458,16 +460,6 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 48) -> DataFrame:
 # executor memory on the broadcast.
 _HOT_BCAST_LIMIT = 100_000
 
-# connected_components re-keys its symmetric edge checkpoint on the
-# propagation key once the edge list is at least one task-width
-# (aligned with the loop's 150k-rows/task partition sizing): above
-# it, the keyed checkpoint removes an edge-sized exchange from every
-# propagation round; below it that exchange is KBs and the extra
-# materialization would be pure added latency. Tests drop this to 0
-# to pin keyed-vs-unkeyed label equality.
-_CC_KEYED_SYM_MIN_EDGES = 150_000
-
-
 def lsh_candidates(
     sigs: DataFrame,
     bands: int = 16,
@@ -705,14 +697,18 @@ def connected_components(
     survivors must be picked per *transitive* group (a~b, b~c ⇒ one
     survivor among {a,b,c}).
 
-    Each round is one join + groupBy (label-sized shuffle) and labels
-    are localCheckpoint-ed — same lineage discipline as PageRank
-    (operators/graph.py). Near-dup clusters are near-cliques, so the
-    label frontier collapses in O(log diameter) ≈ 2-3 rounds; the
-    fixpoint check costs NO job of its own — the changed-label count
-    is measured by an ``Observation`` on the update projection inside
-    the same job that materializes the new labels (the probe-join
-    alternative re-shuffles both label frames every round)."""
+    The rounds are ``graph.min_label_propagation``'s superstep
+    (``graph._supersteps`` over ``graph._min_label_step``): one
+    label-sized shuffle per round, labels localCheckpoint-ed, and
+    the stop free of any job of its own — the changed-label count is
+    observed on the job that materializes the new labels. Near-dup
+    clusters are near-cliques, so the label frontier collapses in
+    O(log diameter) ≈ 2-3 rounds of the ``max_iter`` budget."""
+    # The fusion below means at least one propagation round always
+    # runs — make that floor an explicit contract instead of silently
+    # returning 1-round labels for a nonsensical budget.
+    if max_iter < 1:
+        raise ValueError("connected components: max_iter must be >= 1")
     # Symmetrize with a per-row EXPLODE instead of union-of-two-
     # selects (round 11): a union embeds the pair-producing subtree
     # TWICE in the checkpoint's plan, so an expensive upstream (for
@@ -721,104 +717,34 @@ def connected_components(
     # inside the task that produced it, one upstream execution
     # (semantic_dedup 7.1 → 4.3 s best at sf0.1; same trick as
     # trade_graph_edges).
-    e_obs = Observation()
-    sym = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("d1").alias("a"), F.col("d2").alias("b")
-                    ),
-                    F.struct(
-                        F.col("d2").alias("a"), F.col("d1").alias("b")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.a", "e.b")
-        .observe(e_obs, F.count(F.lit(1)).alias("m"))
-        .localCheckpoint()
+    sym = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("d1").alias("src"), F.col("d2").alias("dst")),
+                F.struct(F.col("d2").alias("src"), F.col("d1").alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
+    labels, _ = _supersteps(
+        sym, _first_min_label_round, _min_label_step, max_iter - 1, key="src"
     )
-    # The loop runs under session.fixed_plan, sized from the measured
-    # edge count — the PageRank loop discipline (graph.py): with AQE
-    # on, the keyed sym checkpoint below would lose its key.
-    m = int(e_obs.get["m"])
-    loop_parts = loop_partitions(m)
-    with fixed_plan(pairs.sparkSession, loop_parts):
-        # Re-checkpoint the symmetric edge list hash-partitioned on
-        # the propagation key (round 11, the pagerank links
-        # treatment): the first checkpoint can't be keyed — it is
-        # the materialization that MEASURES m, which sizes the
-        # partitioning — but left unkeyed the loop re-exchanged the
-        # EDGE-sized frame by b every round. One extra edge pass at
-        # setup buys an exchange-free sym side for every round (the
-        # per-round shuffles left are all label-sized; plan checked:
-        # 2 exchanges/round → 1). Gated on the same one-task sizing
-        # constant: below it the per-round edge exchange is KBs and
-        # the extra materialization is pure added latency.
-        if m >= _CC_KEYED_SYM_MIN_EDGES:
-            sym = sym.repartition(loop_parts, F.col("b")).localCheckpoint()
-        labels = _cc_loop(sym, max_iter)
     return labels.select(
-        F.col("a").alias("doc_id"), F.col("label").alias("cluster_id")
+        F.col("id").alias("doc_id"), F.col("lab").alias("cluster_id")
     )
 
 
-def _cc_loop(sym: DataFrame, max_iter: int) -> DataFrame:
-    # Round 1 fused with the label init (round 11): labels start as
-    # identity, so the first propagation is least(a, min neighbor) —
-    # a plain aggregate over the checkpointed edge list with no join,
-    # and the separate identity-frame materialization job disappears
-    # (one job less per CC consumer; values identical to init + one
-    # join round, since every neighbor's initial label IS itself).
-    # The fusion means at least one propagation round always runs —
-    # make that floor an explicit contract instead of silently
-    # returning 1-round labels for a nonsensical budget.
-    if max_iter < 1:
-        raise ValueError("connected components: max_iter must be >= 1")
-    labels = (
-        sym.groupBy("a")
-        .agg(F.least(F.col("a"), F.min("b")).alias("label"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter - 1):
-        obs = Observation()
-        labels = _cc_round(sym, labels, obs).localCheckpoint()
-        if int(obs.get["changed"] or 0) == 0:
-            break
-    return labels
-
-
-def _cc_round(
-    sym: DataFrame, labels: DataFrame, obs: Observation
-) -> DataFrame:
-    """One min-label propagation round, unmaterialized: each vertex
-    takes the least of its label and its neighbors' labels. The count
-    of changed labels is observed into ``obs`` on the same job."""
-    neighbor_min = (
-        sym.join(
-            labels.select(F.col("a").alias("b"), F.col("label").alias("nl")),
-            "b",
-        )
-        .groupBy("a")
-        .agg(F.min("nl").alias("minn"))
-    )
+def _first_min_label_round(sym: DataFrame) -> DataFrame:
+    """Round 1 fused with the label init (round 11): labels start as
+    identity, so the first propagation is least(v, min neighbour) — a
+    plain aggregate over the checkpointed edge list with no join and
+    no identity-frame materialization job (values identical to init +
+    one join round, since every neighbour's initial label IS
+    itself)."""
     return (
-        labels.join(neighbor_min, "a", "left")
-        .select(
-            "a",
-            F.col("label").alias("old"),
-            F.least(
-                F.col("label"), F.coalesce(F.col("minn"), F.col("label"))
-            ).alias("label"),
-        )
-        .observe(
-            obs,
-            F.sum((F.col("label") != F.col("old")).cast("long")).alias(
-                "changed"
-            ),
-        )
-        .select("a", "label")
+        sym.groupBy("dst")
+        .agg(F.least(F.col("dst"), F.min("src")).alias("lab"))
+        .withColumnRenamed("dst", "id")
+        .localCheckpoint()
     )
 
 

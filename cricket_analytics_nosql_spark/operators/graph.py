@@ -41,6 +41,8 @@ conflate customer k with supplier k.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -647,13 +649,7 @@ def pagerank_top_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _top_ranks(pr: DataFrame) -> DataFrame:
     """Top-20 trade-graph ranks decoded back to (entity, key)."""
     return (
-        pr.select(
-            F.when(F.col("id") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("entity"),
-            F.shiftright("id", 1).alias("key"),
-            F.round("pagerank", 6).alias("pagerank"),
-        )
+        pr.select(*_entity_key("id"), F.round("pagerank", 6).alias("pagerank"))
         .orderBy(F.desc("pagerank"), F.asc("entity"), F.asc("key"))
         .limit(20)
     )
@@ -1283,6 +1279,156 @@ FROM tri
 """
 
 
+# ---------------------------------------------------------------------------
+# Bounded superstep loops (Pregel's shape; Malewicz et al., SIGMOD 2010)
+# ---------------------------------------------------------------------------
+
+def _supersteps(
+    edges: DataFrame,
+    init: Callable[[DataFrame], DataFrame],
+    step: Callable[[DataFrame, DataFrame, Observation], DataFrame],
+    rounds: int,
+    key: str | None = None,
+) -> tuple[DataFrame, bool]:
+    """The one loop of every iterative graph operator but PageRank:
+    ``(state, converged)`` after at most ``rounds`` supersteps.
+
+    - Entry: ``edges`` is materialized once and its row count m is
+      observed on that same job. ``init(e)`` builds the first state
+      from the checkpointed edge side ``e``, never from the raw edge
+      lineage, which would re-run the edge build inside the loop.
+    - The loop runs under ``session.fixed_plan(spark,
+      loop_partitions(m))``. When ``key`` names the edge column each
+      step joins on and m is at least one loop task
+      (``session.ROWS_PER_TASK``), ``e`` is re-checkpointed
+      ``repartition(parts, key)``: every round then joins the edge
+      side in place and only state-sized frames shuffle. Below that
+      the per-round edge exchange is KBs and the extra
+      materialization would be pure latency.
+    - Each round is ``step(e, state, obs).localCheckpoint()``: one job
+      per round, and the state's lineage never grows (iterating over
+      materialized intermediates, not a growing plan; Shark, SIGMOD
+      2013). ``step`` observes a ``changed`` count into ``obs`` on
+      that job.
+    - Stop: every step is a deterministic function of (edges, state),
+      so a round that changes nothing is a fixpoint, and running the
+      rest of the budget would return the same rows. The loop stops
+      there; ``converged`` is False only when the budget ran out
+      first.
+
+    The loop enters ``fixed_plan``, whose confs are session-wide: no
+    ``similarity._concurrent_frames`` thunk may call it."""
+    e_obs = Observation()
+    e = edges.observe(e_obs, F.count(F.lit(1)).alias("m")).localCheckpoint()
+    m = int(e_obs.get["m"])
+    parts = loop_partitions(m)
+    with fixed_plan(e.sparkSession, parts):
+        if key is not None and m >= ROWS_PER_TASK:
+            e = e.repartition(parts, F.col(key)).localCheckpoint()
+        state = init(e)
+        for _ in range(rounds):
+            obs = Observation()
+            state = step(e, state, obs).localCheckpoint()
+            if not obs.get["changed"]:
+                return state, True
+    return state, False
+
+
+def _changed(obs: Observation, state: DataFrame, changed) -> DataFrame:
+    """``state`` with the count of rows where ``changed`` holds
+    observed into ``obs`` — the superstep stop signal."""
+    return state.observe(obs, F.count_if(changed).alias("changed"))
+
+
+def _vertex_ids(e: DataFrame) -> DataFrame:
+    """Every vertex of an ``(src, dst)`` edge list, labelled by its
+    own id: ``(id, lab)``."""
+    return (
+        e.select(F.col("src").alias("id"))
+        .unionByName(e.select(F.col("dst").alias("id")))
+        .distinct()
+        .select("id", F.col("id").alias("lab"))
+    )
+
+
+def _adopt(
+    labels: DataFrame, proposed: DataFrame, lab, obs: Observation
+) -> DataFrame:
+    """Carry labels forward: every vertex takes ``lab``, an
+    expression over its old ``lab`` and its ``proposed(id, new)``
+    label (null for a vertex with no in-neighbours)."""
+    return _changed(
+        obs,
+        labels.join(proposed, "id", "left").select(
+            "id", F.col("lab").alias("old"), lab.alias("lab")
+        ),
+        F.col("lab") != F.col("old"),
+    ).select("id", "lab")
+
+
+def _min_label_step(
+    e: DataFrame, labels: DataFrame, obs: Observation
+) -> DataFrame:
+    """One min-label round: every vertex takes the least of its label
+    and its in-neighbours' labels. With ``e`` keyed on ``src`` and
+    ``labels`` partitioned on ``id``, its one exchange is the
+    label-sized per-``dst`` minimum."""
+    proposed = (
+        e.join(
+            labels.select(F.col("id").alias("src"), F.col("lab").alias("slab")),
+            "src",
+        )
+        .groupBy(F.col("dst").alias("id"))
+        .agg(F.min("slab").alias("new"))
+    )
+    return _adopt(labels, proposed, F.least("lab", "new"), obs)
+
+
+def _mode_step(e: DataFrame, labels: DataFrame, obs: Observation) -> DataFrame:
+    """One LPA round: every vertex with in-neighbours takes their
+    most frequent label, ties to the smallest. ``min_by`` over the
+    composite (−count, label) picks the mode in ONE aggregation, no
+    window sort."""
+    proposed = (
+        e.join(labels.withColumnRenamed("id", "src"), "src")
+        .groupBy("dst", "lab")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .groupBy(F.col("dst").alias("id"))
+        .agg(
+            F.min_by(
+                F.col("lab"), F.struct((-F.col("c")).alias("nc"), F.col("lab"))
+            ).alias("new")
+        )
+    )
+    return _adopt(labels, proposed, F.coalesce("new", "lab"), obs)
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """``(v, d)``: the degree of every vertex of a ``(va, vb)`` edge
+    list."""
+    return (
+        e.select(F.col("va").alias("v"))
+        .unionAll(e.select(F.col("vb").alias("v")))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
+def _peel_step(k: int):
+    """The k-core peel round: drop every edge with an endpoint of
+    degree < k; the changed count is the edges dropped."""
+
+    def step(_e: DataFrame, cur: DataFrame, obs: Observation) -> DataFrame:
+        deg = _degrees(cur)
+        ends = cur.join(
+            deg.select(F.col("v").alias("va"), F.col("d").alias("da")), "va"
+        ).join(deg.select(F.col("v").alias("vb"), F.col("d").alias("db")), "vb")
+        low = F.least("da", "db") < k
+        return _changed(obs, ends, low).filter(~low).select("va", "vb")
+
+    return step
+
+
 def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     """The k-core of an undirected graph (``va < vb`` edge rows): the
     unique maximal subgraph where every vertex keeps degree ≥ k —
@@ -1293,39 +1439,14 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     Iterative peeling: drop all vertices below degree k, remove
     their incident edges, recompute — the classic fixpoint, O(log)
     rounds on real graphs because each round's removals cascade.
-    Each round is one degree aggregate + one semi-join filter of the
-    (shrinking) edge list; the surviving edges are localCheckpoint-ed
-    per round (same lineage discipline as ``connected_components``)
-    and the removal count is observed inside the checkpoint job, so
-    the fixpoint test costs no extra pass. Returns the surviving
-    edges."""
-    cur = edges.select("va", "vb").localCheckpoint()
-    prev = -1  # previous round's surviving-edge count; fixpoint when
-    # a round removes nothing (one no-op round instead of a count()
-    # probe job — the same zero-extra-pass discipline as the CC loop)
-    for _ in range(max_iter):
-        deg = (
-            cur.select(F.col("va").alias("v"))
-            .unionAll(cur.select(F.col("vb").alias("v")))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= k).select("v")
-        obs = Observation()
-        cur = (
-            cur.join(
-                keep.select(F.col("v").alias("va")), "va", "left_semi"
-            )
-            .join(keep.select(F.col("v").alias("vb")), "vb", "left_semi")
-            .select("va", "vb")
-            .observe(obs, F.count(F.lit(1)).alias("n_edges"))
-            .localCheckpoint()
-        )
-        after = int(obs.get["n_edges"] or 0)
-        if after == prev or after == 0:
-            break
-        prev = after
-    else:
+    Each superstep (``_supersteps``) is one degree aggregate and two
+    joins of the shrinking edge list; ``max_iter`` is a budget, and
+    the loop stops at the first round that drops no edge. Returns
+    the surviving edges."""
+    core, converged = _supersteps(
+        edges.select("va", "vb"), lambda e: e, _peel_step(k), max_iter
+    )
+    if not converged:
         # exhausting the budget without a fixpoint would silently
         # return a NON-core (vertices below k remain) — refuse.
         # Adversarial shapes (a long path under k=2 peels two
@@ -1334,7 +1455,7 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
             f"kcore: no fixpoint within max_iter={max_iter} rounds; "
             "raise max_iter (pathological low-connectivity graph)"
         )
-    return cur
+    return core
 
 
 WALK_LEN = 4
@@ -1571,74 +1692,75 @@ def sssp(
     source: DataFrame,
     rounds: int,
     cost_col: str = "cost",
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """Bounded-hop single-source shortest path by synchronous
-    Bellman-Ford relaxation: after ``rounds`` rounds the result is
-    EXACTLY min path cost over all paths of ≤ ``rounds`` edges —
-    a closed-form contract a recursive-CTE oracle can replay, unlike
-    run-to-convergence (whose round count depends on the data).
+    Bellman-Ford relaxation: the result is EXACTLY the min path cost
+    over all paths of ≤ ``rounds`` edges — a closed-form contract a
+    recursive-CTE oracle can replay, unlike run-to-convergence (whose
+    round count depends on the data). ``rounds`` is a budget: the
+    loop (``_supersteps``) stops early at a round that improves no
+    distance, which returns the same rows.
 
     ``source`` is a 1-row (or few-row) DataFrame ``(id, cost)`` —
     kept as a DataFrame so the seed never has to round-trip through
     the driver. Each round is one equi-join dist⋈edges on the
-    frontier's vertex id plus one min-groupBy — two shuffles on
-    vertex id, both vertex-frame-sized, never path-enumeration-sized
-    (the frontier collapses to one row per vertex per round, which
-    is what makes this the 100 TB spelling while the oracle's
-    recursive CTE enumerates every path). Costs are integers, so
-    min() needs no float-merge tolerance.
-
-    ``checkpoint_every``: every k rounds, cut lineage with
-    ``localCheckpoint`` (the PageRank discipline — without it the
-    plan tree doubles per round and deep traversals die in the
-    optimizer long before the executors see data). Left off for the
-    bounded 3-round catalog query, where re-planning three rounds is
-    cheaper than materializing the frontier; REQUIRED for real
-    depth — results are identical either way (tested).
+    frontier's vertex id plus one min-groupBy — vertex-keyed
+    shuffles, never path-enumeration-sized (the frontier collapses to
+    one row per vertex per round, which is what makes this the
+    100 TB spelling while the oracle's recursive CTE enumerates every
+    path). Costs are integers, so min() needs no float-merge
+    tolerance.
 
     Reference analogue: none in the reference's Cypher surface, but
     it is the weighted twin of its multi-hop duel queries
     (cypher_queries.cypher:18-25) and of ``recursive_trade_bfs``.
     """
-    dist = source.select(
+    seed = source.select(
         F.col("id").cast("long").alias("id"),
-        F.col(cost_col).cast("long").alias(cost_col),
+        F.col(cost_col).cast("long").alias("cost"),
     )
+    dist = _bellman_ford(edges, lambda _: seed, rounds, cost_col)
+    return dist.withColumnRenamed("cost", cost_col)
+
+
+def _bellman_ford(
+    edges: DataFrame,
+    seed: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    cost_col: str = "cost",
+) -> DataFrame:
+    """``sssp``'s loop, seeded by ``seed(e)`` of the checkpointed edge
+    list ``e(src, dst, w)``: ``(id, cost)``."""
     e = edges.select(
         F.col("src").cast("long").alias("src"),
         F.col("dst").cast("long").alias("dst"),
-        F.col(cost_col).cast("long").alias("__ecost"),
+        F.col(cost_col).cast("long").alias("w"),
     )
-    if checkpoint_every:
-        # deep loops: pin the edge list once so rounds never re-derive
-        # it (and its upstream build join) from lineage — without
-        # this, round k's plan replays the edge build k times and the
-        # shuffle audit shows read ≈ depth × write (PERF.md,
-        # Iterative graph). Same discipline as label_propagation /
-        # pagerank's entry checkpoint.
-        e = e.localCheckpoint()
-    for r in range(rounds):
-        # rename-before-join: dist re-derives from e after round 1,
-        # so frame-qualified refs (dist["id"]) turn ambiguous — the
-        # renamed frontier keeps every column name unique instead
-        relaxed = (
-            dist.withColumnRenamed("id", "__fid")
-            .withColumnRenamed(cost_col, "__fcost")
-            .join(e, F.col("__fid") == F.col("src"))
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("__fcost") + F.col("__ecost")).alias(cost_col),
-            )
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min(cost_col).alias(cost_col))
-        )
-        if checkpoint_every and (r + 1) % checkpoint_every == 0:
-            dist = dist.localCheckpoint()
+    dist, _ = _supersteps(e, seed, _relax_step, rounds, key="src")
     return dist
+
+
+def _relax_step(e: DataFrame, dist: DataFrame, obs: Observation) -> DataFrame:
+    """One Bellman-Ford round over ``dist(id, cost)``. Each old
+    distance rides along as ``old``, so the round's changed count
+    (vertices reached or improved) comes out of the same min-groupBy."""
+    relaxed = (
+        dist.select(F.col("id").alias("src"), F.col("cost").alias("via"))
+        .join(e, "src")
+        .select(
+            F.col("dst").alias("id"),
+            (F.col("via") + F.col("w")).alias("cost"),
+            F.lit(None).cast("long").alias("old"),
+        )
+    )
+    best = (
+        dist.select("id", "cost", F.col("cost").alias("old"))
+        .unionByName(relaxed)
+        .groupBy("id")
+        .agg(F.min("cost").alias("cost"), F.min("old").alias("old"))
+    )
+    improved = F.col("old").isNull() | (F.col("cost") < F.col("old"))
+    return _changed(obs, best, improved).select("id", "cost")
 
 
 def strong_trade_edges_costed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1662,36 +1784,24 @@ def strong_trade_edges_costed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sssp_weighted(
-    spark: SparkSession,
-    sf_dir: str,
-    rounds: int = 3,
-    checkpoint_every: int | None = None,
+    spark: SparkSession, sf_dir: str, rounds: int = 3
 ) -> DataFrame:
     """Cheapest trade-relay paths (≤ ``rounds`` hops) from the
     lowest-id vertex of the strong trade graph: Bellman-Ford
     relaxation where heavy trade relationships are cheap to
     traverse. Top-25 nearest decoded to (entity, key);
     deterministic ties via (cost, entity, key) — integer costs, no
-    float anywhere.
-
-    ``checkpoint_every`` (default off — re-planning 3 bounded rounds
-    is cheaper than materializing the frontier) is the real-depth
-    lever: at rounds ≥ 6 lineage re-derivation makes shuffle read ≈
-    depth × write, and a periodic localCheckpoint restores
-    read ≈ write (tools/shuffle_audit measurement in PERF.md)."""
-    edges = strong_trade_edges_costed(spark, sf_dir)
-    source = edges.agg(F.min("src").alias("id")).select(
-        "id", F.lit(0).alias("cost")
+    float anywhere. The seed's MIN(src) reads the loop's checkpointed
+    edge list, so the trade-graph build runs once."""
+    dist = _bellman_ford(
+        strong_trade_edges_costed(spark, sf_dir),
+        lambda e: e.agg(F.min("src").alias("id")).select(
+            "id", F.lit(0).cast("long").alias("cost")
+        ),
+        rounds,
     )
-    dist = sssp(edges, source, rounds=rounds, checkpoint_every=checkpoint_every)
     return (
-        dist.select(
-            F.when(F.col("id") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("entity"),
-            F.shiftright("id", 1).alias("key"),
-            F.col("cost"),
-        )
+        dist.select(*_entity_key("id"), "cost")
         .orderBy(F.asc("cost"), F.asc("entity"), F.asc("key"))
         .limit(25)
     )
@@ -1728,9 +1838,7 @@ LIMIT 25
 # Label-propagation community detection (synchronous, fixed rounds)
 # ---------------------------------------------------------------------------
 
-def label_propagation(
-    edges: DataFrame, rounds: int, checkpoint_every: int | None = None
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     """Synchronous label propagation: every vertex starts as its own
     community (label = id); each round every vertex adopts the MOST
     FREQUENT label among its in-neighbours, ties broken by the
@@ -1738,88 +1846,55 @@ def label_propagation(
     make the result after a FIXED round count a pure function of the
     edge list — which is what lets an unrolled SQL oracle replay it
     exactly, where classic async LPA is run-order-dependent.
+    ``rounds`` is a budget: the loop (``_supersteps``) stops early at
+    a round that changes no label, which returns the same rows.
 
-    Plan per round: edges ⋈ labels on src (shuffle on vertex id) →
-    count per (dst, label) (partial agg combines map-side) → top-1
-    per vertex via ``min_by`` over (−count, label) — the mode with
-    min-tie-break collapses into ONE aggregation, no window sort.
-    Vertices without in-neighbours keep their label (left join +
-    coalesce). Everything is vertex- or edge-frame-sized; nothing
-    enumerates paths. GDS analogue: ``gds.labelPropagation`` with
-    ``maxIterations=rounds`` (the reference's GDS surface is the
-    same family as its PageRank call, cypher_queries.cypher:28-34).
+    Plan per round (``_mode_step``): edges ⋈ labels on src → count
+    per (dst, label) (partial agg combines map-side) → top-1 per
+    vertex via ``min_by`` → carry-forward left join, so vertices
+    without in-neighbours keep their label. Everything is vertex- or
+    edge-frame-sized; nothing enumerates paths. GDS analogue:
+    ``gds.labelPropagation`` with ``maxIterations=rounds`` (the
+    reference's GDS surface is the same family as its PageRank call,
+    cypher_queries.cypher:28-34).
     """
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
+    labels, _ = _supersteps(
+        edges.select("src", "dst"), _vertex_ids, _mode_step, rounds, key="src"
     )
-    labels = verts.select("id", F.col("id").alias("lab"))
-    e = edges.select("src", "dst")
-    if checkpoint_every:
-        # deep loops: pin the edge list once so rounds never re-derive
-        # it from lineage (the PageRank entry-checkpoint discipline).
-        # Measured at sf0.1 depth 6: plain read/write grows with
-        # depth (4.94 at depth 4); checkpointed it is flat at ~2.5
-        # regardless of cadence (ckpt=1 ≙ ckpt=2), the residual being
-        # one exchange read by two consumers per round (labels feeds
-        # both the e-join and the carry-forward left join) — exchange
-        # REUSE, not re-derivation, so pre-partitioning e buys
-        # nothing (measured: unchanged 2.48)
-        e = e.localCheckpoint()
-    for r in range(rounds):
-        counts = (
-            e.join(labels.withColumnRenamed("id", "src"), "src")
-            .groupBy("dst", "lab")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        # mode with min-label tie-break: min_by over the composite
-        # (−count, label) — smallest tuple = highest count, then
-        # smallest label
-        picked = counts.groupBy("dst").agg(
-            F.min_by(
-                F.col("lab"), F.struct((-F.col("c")).alias("nc"), F.col("lab"))
-            ).alias("new_lab")
-        )
-        labels = (
-            labels.join(picked.withColumnRenamed("dst", "id"), "id", "left")
-            .select(
-                "id", F.coalesce("new_lab", "lab").alias("lab")
-            )
-        )
-        if checkpoint_every and (r + 1) % checkpoint_every == 0:
-            labels = labels.localCheckpoint()
     return labels
 
 
 def lpa_communities(
-    spark: SparkSession,
-    sf_dir: str,
-    rounds: int = 3,
-    checkpoint_every: int | None = None,
+    spark: SparkSession, sf_dir: str, rounds: int = 3
 ) -> DataFrame:
     """Communities of the strong trade graph after ``rounds``
     synchronous LPA rounds: top-25 by (size desc, community asc),
-    the community id decoded to (entity, key) of its label vertex.
-    ``checkpoint_every`` as in ``sssp_weighted`` — off for the
-    bounded catalog query, required at real depth."""
-    edges = strong_trade_edges_costed(spark, sf_dir)
-    labels = label_propagation(
-        edges, rounds=rounds, checkpoint_every=checkpoint_every
+    the community id decoded to (entity, key) of its label vertex."""
+    return _census(
+        label_propagation(strong_trade_edges_costed(spark, sf_dir), rounds)
     )
+
+
+def _census(labels: DataFrame) -> DataFrame:
+    """Top-25 label groups of the trade graph by (size desc, label
+    asc), the label decoded to (entity, key)."""
     return (
         labels.groupBy("lab")
         .agg(F.count(F.lit(1)).alias("size"))
-        .select(
-            F.when(F.col("lab") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("entity"),
-            F.shiftright("lab", 1).alias("key"),
-            F.col("size"),
-        )
+        .select(*_entity_key("lab"), "size")
         .orderBy(F.desc("size"), F.asc("entity"), F.asc("key"))
         .limit(25)
     )
+
+
+def _entity_key(v: str) -> list:
+    """A trade-graph vertex id decoded to its ``(entity, key)``."""
+    return [
+        F.when(F.col(v) % 2 == 0, F.lit("customer"))
+        .otherwise(F.lit("supplier"))
+        .alias("entity"),
+        F.shiftright(v, 1).alias("key"),
+    ]
 
 
 # one unrolled LPA round in SQL: counts → deterministic mode →
@@ -1841,8 +1916,12 @@ _LPA_ROUND_SQL = """
 )
 """
 
-ORACLE_LPA_COMMUNITIES = (
-    """
+def _census_oracle(round_sql: str, rounds: int) -> str:
+    """The unrolled DuckDB oracle of a label loop over the strong
+    trade graph: ``rounds`` copies of ``round_sql``, then the
+    ``_census`` readout."""
+    return (
+        """
 WITH base AS MATERIALIZED (
   SELECT o_custkey AS c, l_suppkey AS s
   FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -1855,17 +1934,20 @@ WITH base AS MATERIALIZED (
   SELECT DISTINCT src AS id, src AS lab FROM e
 )
 """
-    + "".join(_LPA_ROUND_SQL.format(r=r, p=r - 1) for r in (1, 2, 3))
-    + """
+        + "".join(round_sql.format(r=r, p=r - 1) for r in range(1, rounds + 1))
+        + f"""
 SELECT CASE WHEN lab % 2 = 0 THEN 'customer' ELSE 'supplier' END AS entity,
        lab // 2 AS key,
        COUNT(*) AS size
-FROM l3
+FROM l{rounds}
 GROUP BY lab
 ORDER BY size DESC, entity ASC, key ASC
 LIMIT 25
 """
-)
+    )
+
+
+ORACLE_LPA_COMMUNITIES = _census_oracle(_LPA_ROUND_SQL, 3)
 
 
 # ---------------------------------------------------------------------------
@@ -1875,87 +1957,46 @@ LIMIT 25
 WCC_ROUNDS = 4
 
 
-def min_label_propagation(
-    edges: DataFrame, rounds: int, checkpoint_every: int | None = None
-) -> DataFrame:
+def min_label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     """Bounded-radius weakly-connected components by synchronous
     min-label propagation: label(v) starts as v; each round every
     vertex takes the min of its own label and its in-neighbours'
     labels. After ``rounds`` rounds two vertices share a label iff
     the smaller-id end of their component lies within ``rounds``
     hops of both — on real graphs (small diameter) this IS the
-    component id, and the fixed round count makes the result a pure
+    component id, and the round budget makes the result a pure
     function of the edge list that an unrolled SQL oracle replays
-    exactly (the LPA contract; run-to-fixpoint CC is the
-    ``connected_components`` library op, this is its oracled face —
-    the gds.wcc analogue of the reference's GDS surface,
-    cypher_queries.cypher:28-34).
+    exactly (the LPA contract, early stop included). The gds.wcc
+    analogue of the reference's GDS surface
+    (cypher_queries.cypher:28-34).
 
-    Plan per round: edges ⋈ labels on src (vertex-keyed exchange) →
-    min per dst (partial agg collapses map-side — min, not a mode
-    window, so cheaper than LPA's round) → carry-forward left join
-    for vertices with no in-neighbours. Edge- or vertex-sized
+    Plan per round (``_min_label_step``, the round
+    ``dedup.connected_components`` runs too): edges ⋈ labels on src →
+    min per dst (partial agg collapses map-side) → carry-forward left
+    join for vertices with no in-neighbours. Edge- or vertex-sized
     frames only. Pass both edge directions for the undirected
-    reading. ``checkpoint_every`` as in ``label_propagation``."""
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
+    reading."""
+    labels, _ = _supersteps(
+        edges.select("src", "dst"),
+        _vertex_ids,
+        _min_label_step,
+        rounds,
+        key="src",
     )
-    labels = verts.select("id", F.col("id").alias("lab"))
-    e = edges.select("src", "dst")
-    if checkpoint_every:
-        e = e.localCheckpoint()
-    for r in range(rounds):
-        nbr_min = (
-            e.join(
-                labels.select(
-                    F.col("id").alias("src"), F.col("lab").alias("slab")
-                ),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(F.min("slab").alias("nl"))
-        )
-        labels = labels.join(
-            nbr_min.withColumnRenamed("dst", "id"), "id", "left"
-        ).select(
-            "id",
-            F.least(F.col("lab"), F.coalesce("nl", "lab")).alias("lab"),
-        )
-        if checkpoint_every and (r + 1) % checkpoint_every == 0:
-            labels = labels.localCheckpoint()
     return labels
 
 
 def wcc_components(
-    spark: SparkSession,
-    sf_dir: str,
-    rounds: int = WCC_ROUNDS,
-    checkpoint_every: int | None = None,
+    spark: SparkSession, sf_dir: str, rounds: int = WCC_ROUNDS
 ) -> DataFrame:
-    """Component census of the strong trade graph after
-    ``rounds`` min-label rounds: top-25 components by (size desc,
-    component asc), the component id decoded to (entity, key) of its
+    """Component census of the strong trade graph after ``rounds``
+    min-label rounds: top-25 components by (size desc, component
+    asc), the component id decoded to (entity, key) of its
     minimum-label vertex — the readout that tells a corpus-graph
     curator whether the graph is one hairball or has separable
     islands worth partitioning by."""
-    edges = strong_trade_edges_costed(spark, sf_dir)
-    labels = min_label_propagation(
-        edges, rounds=rounds, checkpoint_every=checkpoint_every
-    )
-    return (
-        labels.groupBy("lab")
-        .agg(F.count(F.lit(1)).alias("size"))
-        .select(
-            F.when(F.col("lab") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("entity"),
-            F.shiftright("lab", 1).alias("key"),
-            F.col("size"),
-        )
-        .orderBy(F.desc("size"), F.asc("entity"), F.asc("key"))
-        .limit(25)
+    return _census(
+        min_label_propagation(strong_trade_edges_costed(spark, sf_dir), rounds)
     )
 
 
@@ -1971,31 +2012,7 @@ _WCC_ROUND_SQL = """
 )
 """
 
-ORACLE_WCC_COMPONENTS = (
-    """
-WITH base AS MATERIALIZED (
-  SELECT o_custkey AS c, l_suppkey AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY o_custkey, l_suppkey HAVING COUNT(*) >= 3
-), e AS MATERIALIZED (
-  SELECT c * 2 AS src, s * 2 + 1 AS dst FROM base
-  UNION ALL
-  SELECT s * 2 + 1 AS src, c * 2 AS dst FROM base
-), l0 AS (
-  SELECT DISTINCT src AS id, src AS lab FROM e
-)
-"""
-    + "".join(_WCC_ROUND_SQL.format(r=r, p=r - 1) for r in (1, 2, 3, 4))
-    + """
-SELECT CASE WHEN lab % 2 = 0 THEN 'customer' ELSE 'supplier' END AS entity,
-       lab // 2 AS key,
-       COUNT(*) AS size
-FROM l4
-GROUP BY lab
-ORDER BY size DESC, entity ASC, key ASC
-LIMIT 25
-"""
-)
+ORACLE_WCC_COMPONENTS = _census_oracle(_WCC_ROUND_SQL, WCC_ROUNDS)
 
 
 # ---------------------------------------------------------------------------
@@ -2172,24 +2189,18 @@ KCORE_ROUNDS = 3
 
 
 def kcore_trade_survivors(
-    spark: SparkSession,
-    sf_dir: str,
-    rounds: int = KCORE_ROUNDS,
-    checkpoint_every: int | None = None,
+    spark: SparkSession, sf_dir: str, rounds: int = KCORE_ROUNDS
 ) -> DataFrame:
-    """Fixed-round k-core peeling on the strong trade graph: after
-    ``rounds`` synchronous peels of degree-<{KCORE_K} vertices,
-    report the top-25 surviving vertices by remaining degree.  The
-    FIXED round count (vs ``kcore``'s run-to-fixpoint, which this
+    """Bounded k-core peeling on the strong trade graph: after at
+    most ``rounds`` synchronous peels of vertices of degree below
+    ``KCORE_K``
+    (``kcore``'s superstep, stopping early at a round that drops no
+    edge), report the top-25 surviving vertices by remaining degree.
+    The round budget (vs ``kcore``'s run-to-fixpoint, which this
     catalog query complements as the oracled face of the same
     operator family) makes the result a pure function of the edge
     list that an unrolled SQL oracle replays exactly — the LPA
-    contract.  Each round is one degree aggregate plus two semi-join
-    filters of the shrinking edge list — vertex/edge-frame-sized
-    shuffles only.  ``checkpoint_every`` (default off for the
-    bounded catalog query) cuts lineage every k rounds exactly as
-    run-to-fixpoint ``kcore`` does per round — required at real
-    depth, where re-derivation makes shuffle read ≈ depth × write."""
+    contract."""
     e = (
         trade_edges(spark, sf_dir)
         .filter(F.col("weight") >= 3)
@@ -2198,35 +2209,10 @@ def kcore_trade_survivors(
             (F.col("dst") * 2 + 1).alias("vb"),
         )
     )
-    if checkpoint_every:
-        e = e.localCheckpoint()
-    for r in range(rounds):
-        deg = (
-            e.select(F.col("va").alias("v"))
-            .unionAll(e.select(F.col("vb").alias("v")))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= KCORE_K).select("v")
-        e = e.join(
-            keep.select(F.col("v").alias("va")), "va", "left_semi"
-        ).join(keep.select(F.col("v").alias("vb")), "vb", "left_semi")
-        if checkpoint_every and (r + 1) % checkpoint_every == 0:
-            e = e.localCheckpoint()
-    deg = (
-        e.select(F.col("va").alias("v"))
-        .unionAll(e.select(F.col("vb").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    core, _ = _supersteps(e, lambda e: e, _peel_step(KCORE_K), rounds)
     return (
-        deg.select(
-            F.when(F.col("v") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("entity"),
-            F.shiftright("v", 1).alias("key"),
-            "degree",
-        )
+        _degrees(core)
+        .select(*_entity_key("v"), F.col("d").alias("degree"))
         .orderBy(F.desc("degree"), F.asc("entity"), F.asc("key"))
         .limit(25)
     )
@@ -2245,8 +2231,10 @@ _KCORE_ROUND_SQL = """
 )
 """
 
-ORACLE_KCORE_SURVIVORS = (
-    """
+def _kcore_oracle(rounds: int) -> str:
+    """The unrolled DuckDB oracle of ``kcore_trade_survivors``."""
+    return (
+        """
 WITH base AS MATERIALIZED (
   SELECT o_custkey AS c, l_suppkey AS s
   FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -2255,20 +2243,23 @@ WITH base AS MATERIALIZED (
   SELECT c * 2 AS va, s * 2 + 1 AS vb FROM base
 )
 """
-    + "".join(
-        _KCORE_ROUND_SQL.format(r=r, p=r - 1, k=KCORE_K)
-        for r in (1, 2, 3)
-    )
-    + """
+        + "".join(
+            _KCORE_ROUND_SQL.format(r=r, p=r - 1, k=KCORE_K)
+            for r in range(1, rounds + 1)
+        )
+        + f"""
 SELECT CASE WHEN v % 2 = 0 THEN 'customer' ELSE 'supplier' END AS entity,
        v // 2 AS key,
        COUNT(*) AS degree
-FROM (SELECT va AS v FROM e3 UNION ALL SELECT vb FROM e3)
+FROM (SELECT va AS v FROM e{rounds} UNION ALL SELECT vb FROM e{rounds})
 GROUP BY v
 ORDER BY degree DESC, entity ASC, key ASC
 LIMIT 25
 """
-)
+    )
+
+
+ORACLE_KCORE_SURVIVORS = _kcore_oracle(KCORE_ROUNDS)
 
 
 def degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -247,7 +247,7 @@ def frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # redundant builds were parallel stage work on idle cores and
     # the barrier was pure added latency), so — VERDICT r11 item 2 —
     # the materialization is gated on the MEASURED input size (the
-    # _CC_KEYED_SYM_MIN_EDGES pattern, but from the scan's Catalyst
+    # superstep loop's keyed-edge gate, but from the scan's Catalyst
     # size estimate so the gate itself costs no job): below the gate
     # today's parallel-redundant plan stays (the sf0.1 bench scan is
     # ~11 MB — untouched), above it one materialization replaces

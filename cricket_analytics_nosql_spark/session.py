@@ -36,7 +36,11 @@ def get_spark(
     ``shuffle_partitions`` defaults to ``cpus`` — at 100 TB on a real
     cluster this should instead be sized so post-shuffle partitions
     are ~128-256 MB; AQE coalescing makes the exact number forgiving.
+    On a running session the shuffle partitions are set only when the
+    caller passed ``cpus`` or ``shuffle_partitions``: a defaulted
+    call (the CLI's) keeps the count the session was built with.
     """
+    sized = cpus is not None or shuffle_partitions is not None
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
@@ -55,6 +59,8 @@ def get_spark(
         # memory, UI) are fixed, and handing them to the builder again
         # only makes it log "Using an existing Spark session; only
         # runtime SQL configurations will take effect".
+        if not sized:
+            del runtime["spark.sql.shuffle.partitions"]
         for key, value in runtime.items():
             spark.conf.set(key, value)
     else:

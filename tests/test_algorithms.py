@@ -415,28 +415,6 @@ def test_embedding_covariance_matches_numpy(spark, sf_small):
         assert r.cov_num == expected
 
 
-def test_checkpointed_loops_match_unchckpointed(spark):
-    """The deep-loop lineage cut (checkpoint_every) must not change
-    any result — same ranks/labels with and without."""
-    src = spark.createDataFrame([(0, 0)], "id long, cost long")
-    e = _edges(spark, DIAMOND)
-    plain = sorted(map(tuple, sssp(e, src, rounds=3).collect()))
-    ckpt = sorted(
-        map(tuple, sssp(e, src, rounds=3, checkpoint_every=1).collect())
-    )
-    assert plain == ckpt
-
-    tri = _edges(spark, _undirected([(1, 2), (2, 3), (1, 3), (3, 4)]))
-    plain = sorted(map(tuple, label_propagation(tri, rounds=3).collect()))
-    ckpt = sorted(
-        map(
-            tuple,
-            label_propagation(tri, rounds=3, checkpoint_every=2).collect(),
-        )
-    )
-    assert plain == ckpt
-
-
 def test_wcc_min_label_matches_union_find(spark):
     """Fixed-round min-label WCC vs an independent union-find on the
     same small graph: after rounds ≥ diameter the labels ARE the

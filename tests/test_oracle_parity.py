@@ -57,3 +57,27 @@ def test_compare_rejects_wrong_results(spark, sf_small):
         )
     with pytest.raises(AssertionError):  # cardinality drift
         compare(region.limit(3), ok_sql, sf_small, "meta_rows")
+
+
+def test_parity_cli_rejects_unknown_names_before_starting_spark():
+    """``python -m tools.parity --help`` (or a typo) prints the usage
+    and the unknown names and exits 2 — before any JVM starts: with
+    ``JAVA_HOME`` pointing nowhere, starting one would fail otherwise."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    env = dict(os.environ, JAVA_HOME="/nonexistent")
+    run = subprocess.run(
+        [sys.executable, "-m", "tools.parity", "--help", "no_such_query"],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert run.returncode == 2, run.stderr[-2000:]
+    assert "usage: python -m tools.parity" in run.stderr
+    assert "--help no_such_query" in run.stderr

@@ -982,20 +982,28 @@ def test_covariance_pairs_generated_in_scan_stage(spark, sf_medium):
 
 
 def test_sssp_rounds_are_vertex_keyed_aggregations(spark, sf_medium):
-    """Every relaxation round ends in a min-groupBy on the vertex id
-    — the path-set never materializes (no round multiplies rows
-    through un-aggregated unions)."""
-    from cricket_analytics_nosql_spark.operators.graph import sssp_weighted
+    """Every relaxation round (the production ``graph._relax_step``)
+    ends in a min-groupBy on the vertex id — the path-set never
+    materializes (no round multiplies rows through un-aggregated
+    unions)."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
 
-    plan = plan_of(sssp_weighted(spark, sf_medium))
+    from cricket_analytics_nosql_spark.operators.graph import (
+        _relax_step,
+        strong_trade_edges_costed,
+    )
+
+    e = strong_trade_edges_costed(spark, sf_medium).select(
+        "src", "dst", F.col("cost").alias("w")
+    )
+    dist = e.agg(F.min("src").alias("id")).select(
+        "id", F.lit(0).cast("long").alias("cost")
+    )
+    plan = plan_of(_relax_step(e, dist, Observation()))
     assert "CartesianProduct" not in plan
-    # 3 rounds -> at least 3 final (non-partial) min(cost) aggregations
-    aggs = [
-        ln
-        for ln in plan.splitlines()
-        if ": [min(cost" in ln
-    ]
-    assert len(aggs) >= 3, plan
+    aggs = [ln for ln in plan.splitlines() if ": [min(cost" in ln]
+    assert aggs, plan
 
 
 def test_prefix_jaccard_verify_has_no_full_index_join(spark, sf_medium):

@@ -154,18 +154,20 @@ def test_assign_cells_empty_codebook_assigns_null(spark, sf_small):
 
 
 def test_cc_keyed_sym_path_matches_unkeyed(spark, monkeypatch):
-    """Past the one-task edge threshold, connected_components re-keys
-    its symmetric edge checkpoint on the propagation key (removing an
-    edge-sized exchange per round); labels must be identical either
-    way. Force the keyed path by dropping the threshold to 0."""
+    """Past the one-task edge threshold, the superstep loop re-keys
+    connected_components' symmetric edge checkpoint on the
+    propagation key (removing an edge-sized exchange per round);
+    labels must be identical either way. Force the keyed path by
+    dropping the threshold to 0."""
     from cricket_analytics_nosql_spark.operators import dedup as D
+    from cricket_analytics_nosql_spark.operators import graph as G
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 9), (10, 11), (11, 12), (3, 5)],
         "d1 long, d2 long",
     )
     base = sorted(map(tuple, D.connected_components(pairs).collect()))
-    monkeypatch.setattr(D, "_CC_KEYED_SYM_MIN_EDGES", 0)
+    monkeypatch.setattr(G, "ROWS_PER_TASK", 0)
     keyed = sorted(map(tuple, D.connected_components(pairs).collect()))
     assert keyed == base
     assert base == [

@@ -188,16 +188,16 @@ def test_pagerank_big_graph_loop_round_exchanges_are_vertex_sized(
 
 def test_cc_keyed_loop_round_exchanges_are_label_sized(spark):
     """VERDICT r11 item 6, CC side: with the symmetric edge list
-    checkpointed hash-partitioned on the propagation key b, a loop
-    round exchanges only label-sized frames (labels by b into the
-    join, per-a minima into the agg) — the edge list itself never
-    re-shuffles."""
+    checkpointed hash-partitioned on the propagation key src, a
+    min-label round (the production ``graph._min_label_step``, after
+    ``connected_components``' fused first round) exchanges only
+    label-sized frames — the edge list itself never re-shuffles."""
     from cricket_analytics_nosql_spark.operators.dedup import (
-        _cc_loop,
-        _cc_round,
+        _first_min_label_round,
     )
+    from cricket_analytics_nosql_spark.operators.graph import _min_label_step
 
-    # connected_components' loop scope: shuffle partitions ==
+    # the superstep loop's keyed scope: shuffle partitions ==
     # loop_parts == the sym repartition count
     with fixed_plan(spark, 2):
         pairs = spark.createDataFrame(
@@ -208,25 +208,25 @@ def test_cc_keyed_loop_round_exchanges_are_label_sized(spark):
                 F.explode(
                     F.array(
                         F.struct(
-                            F.col("d1").alias("a"), F.col("d2").alias("b")
+                            F.col("d1").alias("src"), F.col("d2").alias("dst")
                         ),
                         F.struct(
-                            F.col("d2").alias("a"), F.col("d1").alias("b")
+                            F.col("d2").alias("src"), F.col("d1").alias("dst")
                         ),
                     )
                 ).alias("e")
             )
-            .select("e.a", "e.b")
-            .repartition(2, F.col("b"))
+            .select("e.src", "e.dst")
+            .repartition(2, F.col("src"))
             .localCheckpoint()
         )
-        labels = _cc_loop(sym, max_iter=1)  # the fused init round only
-        one_round = _cc_round(sym, labels, Observation())
+        labels = _first_min_label_round(sym)
+        one_round = _min_label_step(sym, labels, Observation())
         plan = one_round._jdf.queryExecution().executedPlan().toString()
-    # ONE hash exchange in the whole round, label-sized: the per-a
+    # ONE hash exchange in the whole round, label-sized: the per-dst
     # minima agg. The join is exchange-free — sym's checkpoint is
-    # keyed by b and labels' groupBy(a) partitioning carries through
-    # the a→b rename — so the edge list never re-shuffles, and the
-    # label update joins two a-partitioned frames in place.
+    # keyed by src and the labels' id partitioning carries through
+    # the id→src rename — so the edge list never re-shuffles, and the
+    # label update joins two id-partitioned frames in place.
     assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "Exchange hashpartitioning(a#" in plan, plan
+    assert "Exchange hashpartitioning(dst#" in plan, plan

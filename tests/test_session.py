@@ -251,3 +251,17 @@ def test_corpus_queries_start_no_python_worker(sf_small, tmp_path):
         tmp_path,
     )
     assert out.split()[-2:] == ["python", "0"], out
+
+
+def test_cli_spark_keeps_the_running_sessions_shuffle_partitions(
+    spark, monkeypatch
+):
+    """The CLI's ``get_spark`` passes no ``cpus``: on a running session
+    it must not move the shuffle partition count to
+    ``$SPARK_GRAFT_CPUS``."""
+    from cricket_analytics_nosql_spark import cli
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(int(before) + 1))
+    assert cli._spark() is spark
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before

@@ -103,7 +103,6 @@ if __name__ == "__main__":
     from cricket_analytics_nosql_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    spark = get_spark("parity")
     qs = all_queries()
     args = _sys.argv[1:]
     if args[:1] == ["--first"]:
@@ -112,6 +111,16 @@ if __name__ == "__main__":
         names = list(qs)[: int(args[1])]
     else:
         names = args or sorted(qs)
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        # checked before get_spark: a typo or --help starts no JVM
+        print(
+            "usage: python -m tools.parity [--first N | QUERY ...]\n"
+            f"unknown query names: {' '.join(unknown)}",
+            file=_sys.stderr,
+        )
+        raise SystemExit(2)
+    spark = get_spark("parity")
     failed = 0
     for n in names:
         spec = qs[n]
